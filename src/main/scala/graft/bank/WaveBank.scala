@@ -1,6 +1,6 @@
 package graft.bank
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Schemas
 import graft.functions.Fnmatch
@@ -142,7 +142,7 @@ class WaveBank(spark: SparkSession, root: String,
     if (txIndex) txTable.latestVersion() >= 0
     else hadoopFs.exists(new org.apache.hadoop.fs.Path(liveIndexPath))
 
-  private def indexDf: DataFrame =
+  private[graft] def indexDf: DataFrame =
     if (txIndex) txTable.read() else spark.read.parquet(liveIndexPath)
 
   /** Publish `df` as a new index generation: write to a fresh
@@ -613,7 +613,7 @@ class WaveBank(spark: SparkSession, root: String,
   }
 
   /** Segments with a `path` column, whatever the store format. */
-  private def segmentsDf: DataFrame =
+  private[graft] def segmentsDf: DataFrame =
     if (v2Format)
       spark.read.format(segmentFormat).load(segmentsPath).drop("n_samples")
     else
@@ -841,40 +841,73 @@ class WaveBank(spark: SparkSession, root: String,
     Intervals.uptime(indexDf,
       Seq("network", "station", "location", "channel"), minGap = 0L)
 
-  /** Bulk fetch: one interval join of (seed glob-free) requests against
-    * the index, then a single read of the matched segment files, trim +
-    * stitch — the single-job reformulation of `get_waveforms_bulk`
-    * (`wavebank.py:581-614`).
+  /** Bulk fetch: one interval join of (glob-free seed_id) requests
+    * against the index collects the distinct matched segment files, and
+    * only those files are read — the single-job reformulation of
+    * `get_waveforms_bulk` (`wavebank.py:581-614`), with the index
+    * deciding which bytes are decoded. The `path` filter prunes the
+    * record formats' file listing and parquet's file list alike.
+    *
+    * Whole-file semantics: the output stitches EVERY segment of every
+    * matched file — all channels and all times those files hold, not
+    * only the requested ones — and is not trimmed; callers trim per
+    * request.
     */
   def getWaveformsBulk(requests: DataFrame): DataFrame = {
     val idx = indexDf
       .withColumn("seed_id", Schemas.seedId(
         col("network"), col("station"), col("location"), col("channel")))
-    val matched = IntervalJoin.overlapping(
-      idx, requests, keyCols = Seq("seed_id"), buffer = bufferNs)
-      .select(col("path")).distinct() // unique files before the expensive read
-    val segs = segmentsDf
-      .join(matched, Seq("path"), "left_semi")
-      .withColumn("seed_id", Schemas.seedId(
-        Schemas.nslcNormalize(col("network")), Schemas.nslcNormalize(col("station")),
-        Schemas.nslcNormalize(col("location")), Schemas.nslcNormalize(col("channel"))))
-    TraceStitch.mergeTraces(spark,
-      segs.select("seed_id", "sampling_period", "starttime", "samples"))
+    stitch(segmentsOf(IntervalJoin.overlapping(
+      idx, requests, keyCols = Seq("seed_id"), buffer = bufferNs)))
   }
 
-  /** Scalar get_waveforms: a one-row bulk request. Codes are normalized
-    * the same way the index was (nullish → "", digits zero-padded) so
-    * e.g. location "--" matches data indexed under "".
+  /** Scalar get_waveforms: returns ONLY the requested NSLC, trimmed to
+    * [t1, t2], as obsplus does. Codes are normalized the same way the
+    * index was (nullish → "", digits zero-padded) so e.g. location "--"
+    * matches data indexed under "".
+    *
+    * The index hits (NSLC equality plus the ±1 s-buffered overlap, as
+    * `read_index`) name the files to read. Every segment of the
+    * requested seed in those files is stitched, whatever its time: a
+    * segment outside the window can still open the merge group whose
+    * grid the window's samples are laid on (starts off the sample grid
+    * by under one sample are adjacent), so the output is the bulk
+    * read's trace of that seed, trimmed.
     */
   def getWaveforms(network: String, station: String, location: String,
                    channel: String, t1: Long, t2: Long): DataFrame = {
-    import spark.implicits._
-    val seed = Seq(network, station, location, channel)
-      .map(Schemas.nslcNormalizeString).mkString(".")
+    val nslc = Seq(network, station, location, channel)
+      .map(Schemas.nslcNormalizeString)
+    val hits = Seq("network", "station", "location", "channel").zip(nslc)
+      .foldLeft(indexDf.filter(Intervals.overlaps(t1, t2, bufferNs))) {
+        case (df, (c, v)) => df.filter(col(c) === v) }
     // trim stitched output to the request window, as the reference's
     // `_prep_output_stream` does (`wavebank.py:783-798`)
     graft.operators.TraceOps.trim(
-      getWaveformsBulk(Seq((seed, t1, t2)).toDF("seed_id", "t1", "t2")), t1, t2)
+      stitch(segmentsOf(hits), Some(nslc.mkString("."))), t1, t2)
+  }
+
+  /** Segments of the files named by the `path`s of `hits` only. Each
+    * task dedupes its own paths (the index has a row per record, most
+    * repeating one file) and the driver the few left — no shuffle; the
+    * path set is pushed to the scan.
+    */
+  private def segmentsOf(hits: DataFrame): DataFrame = {
+    val paths = hits.select("path").as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING).collect().distinct
+    segmentsDf.filter(col("path").isin(paths.toSeq: _*))
+  }
+
+  /** Stitched traces of `segs` keyed by normalized seed_id, optionally
+    * restricted to one seed before the stitch.
+    */
+  private def stitch(segs: DataFrame, seed: Option[String] = None): DataFrame = {
+    val keyed = segs.select(Schemas.seedId(
+        Schemas.nslcNormalize(col("network")), Schemas.nslcNormalize(col("station")),
+        Schemas.nslcNormalize(col("location")), Schemas.nslcNormalize(col("channel")))
+      .as("seed_id"), col("sampling_period"), col("starttime"), col("samples"))
+    TraceStitch.mergeTraces(spark,
+      seed.fold(keyed)(s => keyed.filter(col("seed_id") === s)))
   }
 
   /** SDS-layout export — re-chunk the archive into a day-partitioned

@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
 object TraceOps {
 
   /** Trim each trace to the window [t1, t2] (inclusive sample times).
-    * Rows whose trimmed sample set is empty are dropped. Integer ns
-    * arithmetic throughout (doubles cannot index ns-grade grids).
+    * Rows whose trimmed sample set is empty are dropped. An `endtime`
+    * column, when present, is recomputed from the trimmed samples (end
+    * exclusive, as the stitch writes it). Integer ns arithmetic
+    * throughout (doubles cannot index ns-grade grids).
     */
-  def trim(df: DataFrame, t1: Long, t2: Long): DataFrame =
-    df.withColumn("_i0", expr(
+  def trim(df: DataFrame, t1: Long, t2: Long): DataFrame = {
+    val trimmed = df.withColumn("_i0", expr(
         s"IF($t1 <= starttime, 0L, ($t1 - starttime + sampling_period - 1) div sampling_period)"))
       .withColumn("_i1", expr(
         s"least(CAST(size(samples) - 1 AS BIGINT), ($t2 - starttime) div sampling_period)"))
@@ -25,6 +27,10 @@ object TraceOps {
       .withColumn("samples", expr(
         "slice(samples, CAST(_i0 + 1 AS INT), CAST(_i1 - _i0 + 1 AS INT))"))
       .drop("_i0", "_i1")
+    if (!df.columns.contains("endtime")) trimmed
+    else trimmed.withColumn("endtime", col("starttime") +
+      size(col("samples")).cast("long") * col("sampling_period"))
+  }
 
   /** Keep every `factor`-th sample; sampling_period scales by factor
     * (plain decimation without an anti-alias filter — the filter is a

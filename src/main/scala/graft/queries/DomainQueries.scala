@@ -17,9 +17,9 @@ import graft.operators.TraceStitch
   *     per-event Python loop is a single broadcast interval join here.
   *   - q53: `merge_traces` (§2.5, `utils/waveforms.py:221-289`) —
   *     sessionize segments into merge groups (running-max adjacency,
-  *     one-sample tolerance), stitch samples onto the group grid with
-  *     later-trace-wins overlap semantics via the typed StitchAgg
-  *     Aggregator, ≤1-slot holes surfacing as NaN. The oracle rebuilds
+  *     one-sample tolerance) in one sorted pass per (seed, period),
+  *     stitch samples onto the group grid with later-trace-wins overlap
+  *     semantics, ≤1-slot holes surfacing as NaN. The oracle rebuilds
   *     the same grid per slot with max_by(winner) — if group breaks,
   *     overlay order, or hole semantics drift, the hash mismatches.
   */

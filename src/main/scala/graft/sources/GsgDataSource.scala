@@ -207,11 +207,13 @@ class GsgScanBuilder(tableSchema: StructType, options: Map[String, String])
   override def pruneColumns(requiredSchema: StructType): Unit =
     this.requiredSchema = requiredSchema
 
-  /** Header-evaluable filters are pushed; everything (pushed included)
-    * is returned for post-scan re-evaluation — parquet's contract.
+  /** Header-evaluable and `path` filters are pushed; everything
+    * (pushed included) is returned for post-scan re-evaluation —
+    * parquet's contract.
     */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(GsgHeaderFilter.supported)
+    pushed = filters.filter(f =>
+      GsgHeaderFilter.supported(f) || SegmentSourceShared.isPathFilter(f))
     filters
   }
 
@@ -280,12 +282,16 @@ class GsgScan(dir: String, requiredSchema: StructType, pushed: Array[Filter],
   override def toBatch: Batch = this
   override def description(): String =
     s"GsgScan path=$dir, ReadSchema: ${requiredSchema.simpleString}, " +
-      s"PushedFilters: [${pushed.mkString(", ")}]" +
+      s"PushedFilters: [${headerFilters.mkString(", ")}]" +
+      paths.fold("")(ps => s", PathFilter: ${ps.size} paths") +
       modifiedAfterMs.fold("")(t => s", ModifiedAfterMs: $t")
 
+  // `path` filters prune the listing; only header filters reach tasks
+  private val (paths, headerFilters) =
+    SegmentSourceShared.splitPathFilters(pushed)
 
   private lazy val files: Seq[FileStatus] =
-    SegmentSourceShared.listFiles(dir, HeaderLen, modifiedAfterMs)
+    SegmentSourceShared.listFiles(dir, HeaderLen, modifiedAfterMs, paths)
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
@@ -375,7 +381,7 @@ class GsgScan(dir: String, requiredSchema: StructType, pushed: Array[Filter],
   override def createReaderFactory(): PartitionReaderFactory =
     // ship the session's hadoop conf ONCE via broadcast, not per task
     // (Configuration is not serializable; the pairs are)
-    GsgReaderFactory(requiredSchema.fieldNames, pushed,
+    GsgReaderFactory(requiredSchema.fieldNames, headerFilters,
       SegmentSourceShared.broadcastConf())
 }
 

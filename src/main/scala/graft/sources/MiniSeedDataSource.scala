@@ -152,7 +152,8 @@ class MiniSeedScanBuilder(tableSchema: StructType, options: Map[String, String])
     this.requiredSchema = requiredSchema
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(GsgHeaderFilter.supported)
+    pushed = filters.filter(f =>
+      GsgHeaderFilter.supported(f) || SegmentSourceShared.isPathFilter(f))
     filters
   }
 
@@ -174,12 +175,17 @@ class MiniSeedScan(dir: String, requiredSchema: StructType,
   override def toBatch: Batch = this
   override def description(): String =
     s"MiniSeedScan path=$dir, ReadSchema: ${requiredSchema.simpleString}, " +
-      s"PushedFilters: [${pushed.mkString(", ")}]" +
+      s"PushedFilters: [${headerFilters.mkString(", ")}]" +
+      paths.fold("")(ps => s", PathFilter: ${ps.size} paths") +
       modifiedAfterMs.fold("")(t => s", ModifiedAfterMs: $t")
+
+  // `path` filters prune the listing; only header filters reach tasks
+  private val (paths, headerFilters) =
+    SegmentSourceShared.splitPathFilters(pushed)
 
   private lazy val files: Seq[FileStatus] =
     SegmentSourceShared.listFiles(dir, MiniSeedDataSource.MinRecordLen,
-      modifiedAfterMs)
+      modifiedAfterMs, paths)
 
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
@@ -242,7 +248,7 @@ class MiniSeedScan(dir: String, requiredSchema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val (recAcc, byteAcc) = MiniSeedDataSource.skipCounters(dir)
-    MiniSeedReaderFactory(requiredSchema.fieldNames, pushed,
+    MiniSeedReaderFactory(requiredSchema.fieldNames, headerFilters,
       SegmentSourceShared.broadcastConf(), recAcc, byteAcc)
   }
 }

@@ -2,37 +2,64 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.sources
 
 import scala.collection.mutable
 
 /** Plumbing shared by the record-oriented segment sources (gsg,
-  * mseed): directory walking with the hidden-path and mtime-watermark
-  * rules, greedy slice bin-packing, Hadoop-conf shipping, and the
-  * staged-rename sink commit. Format-specific logic (framing, split
+  * mseed): directory walking with the hidden-path, mtime-watermark and
+  * pushed-`path` rules, greedy slice bin-packing, Hadoop-conf shipping,
+  * and the staged-rename sink commit. Format-specific logic (framing, split
   * boundaries, codecs) stays in each source.
   */
 private[sources] object SegmentSourceShared {
   import GsgDataSource.{FileSlice, isHidden}
 
-  /** Recursive listing: hidden paths skipped, files under `minLen`
-    * (no room for one header) skipped, optional mtime watermark.
+  /** A pushed filter on the `path` column: the scan prunes its file
+    * listing with it (an index-driven read names the files it needs).
     */
-  def listFiles(dir: String, minLen: Long,
-                modifiedAfterMs: Option[Long]): Seq[FileStatus] = {
+  def isPathFilter(f: sources.Filter): Boolean = f match {
+    case sources.EqualTo("path", _: String) => true
+    case sources.In("path", _) => true
+    case _ => false
+  }
+
+  /** Pushed filters split into the paths every `path` filter admits
+    * (None: no such filter, every file) and the header filters the
+    * tasks evaluate.
+    */
+  def splitPathFilters(pushed: Array[sources.Filter])
+      : (Option[Set[String]], Array[sources.Filter]) = {
+    val (byPath, header) = pushed.partition(isPathFilter)
+    val paths = byPath.toSeq.collect {
+      case sources.EqualTo(_, v: String) => Set(v)
+      case sources.In(_, vs) => vs.collect { case v: String => v }.toSet
+    }.reduceOption(_ intersect _)
+    (paths, header)
+  }
+
+  /** Recursive listing: hidden paths skipped, files under `minLen`
+    * (no room for one header) skipped, optional mtime watermark, and
+    * optionally only the named `paths` (as the scan reports them in its
+    * `path` column).
+    */
+  def listFiles(dir: String, minLen: Long, modifiedAfterMs: Option[Long],
+                paths: Option[Set[String]]): Seq[FileStatus] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
-    val fresh: FileStatus => Boolean =
-      modifiedAfterMs.fold((_: FileStatus) => true)(t =>
-        s => s.getModificationTime > t)
+    def keep(s: FileStatus): Boolean =
+      s.getLen >= minLen &&
+        modifiedAfterMs.forall(s.getModificationTime > _) &&
+        paths.forall(_(s.getPath.toString))
     def walk(s: FileStatus): Seq[FileStatus] =
       if (isHidden(s.getPath)) Nil // staged writes / metadata
       else if (s.isDirectory) fs.listStatus(s.getPath).toSeq.flatMap(walk)
-      else if (s.getLen >= minLen && fresh(s)) Seq(s)
+      else if (keep(s)) Seq(s)
       else Nil
     if (!fs.exists(p)) Nil else fs.getFileStatus(p) match {
       case d if d.isDirectory => fs.listStatus(p).toSeq.flatMap(walk)
-      case f => Seq(f).filter(s => s.getLen >= minLen && fresh(s))
+      case f => Seq(f).filter(keep)
     }
   }
 

@@ -32,22 +32,38 @@ private[graft] object ParallelCommits {
       }
     })
 
+  /** How long a failed `fa` waits for the concurrent `fb` to finish. */
+  private val OrphanWaitMs: Long = 5L * 60 * 1000
+
   def inParallel[A, B](fa: => A, fb: => B): (A, B) = {
     val fut = pool.submit(new java.util.concurrent.Callable[B] {
       override def call(): B = fb
     })
     // if fa throws, the fb commit must NOT keep running unobserved in
-    // the background (round 18, advisor item): a streaming-query
-    // failure/restart could otherwise overlap a retried batch with the
-    // still-live orphan. Await it (commits are not safely
-    // interruptible mid-write; appendOnce tags keep any completed
-    // orphan exactly-once), then rethrow fa's failure.
+    // the background: a streaming-query failure/restart could otherwise
+    // overlap a retried batch with the still-live orphan. Await it
+    // (commits are not safely interruptible mid-write; appendOnce tags
+    // keep any completed orphan exactly-once), but only for
+    // `OrphanWaitMs`: a wedged fb is logged and left behind rather than
+    // hanging the failure path. fa's failure is the one thrown; fb's
+    // rides along as suppressed.
     val a =
       try fa
       catch {
         case e: Throwable =>
-          try fut.get()
-          catch { case _: Throwable => () } // fa's failure is the report
+          try fut.get(OrphanWaitMs, java.util.concurrent.TimeUnit.MILLISECONDS)
+          catch {
+            case x: java.util.concurrent.ExecutionException =>
+              e.addSuppressed(x.getCause)
+            case x: java.util.concurrent.TimeoutException =>
+              System.err.println(s"[graft] ParallelCommits: the concurrent " +
+                s"branch is still running $OrphanWaitMs ms after the other " +
+                "failed; rethrowing without it")
+              e.addSuppressed(x)
+            case x: InterruptedException =>
+              Thread.currentThread().interrupt()
+              e.addSuppressed(x)
+          }
           throw e
       }
     val b =

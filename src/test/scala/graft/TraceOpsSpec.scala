@@ -48,5 +48,6 @@ class TraceOpsSpec extends SparkSpec {
     assert(out.length == 1)
     assert(out(0).getAs[Long]("starttime") == 250L)
     assert(out(0).getAs[scala.collection.Seq[Double]]("samples").length == 26)
+    assert(out(0).getAs[Long]("endtime") == 510L)
   }
 }
