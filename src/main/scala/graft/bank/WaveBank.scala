@@ -6,30 +6,35 @@ import graft.core.Schemas
 import graft.functions.Fnmatch
 import graft.operators.{IntervalJoin, Intervals, TimeChunks, TraceStitch}
 
-/** Parquet-backed waveform archive — the WaveBank capability pillar
-  * (obsplus `bank/wavebank.py`) re-expressed Spark-first:
+/** Waveform archive — the WaveBank capability pillar (obsplus
+  * `bank/wavebank.py`) re-expressed Spark-first:
   *
   *   - physical layout: `root/segments/` holds trace segments
-  *     (NSLC + starttime + sampling_period + samples array) partitioned
-  *     by (network, station); `root/index/` holds the summary index
-  *     (one row per segment, no samples) — the HDF5 index replacement.
-  *   - the index is small relative to data (1 row per segment) and is
-  *     what every query touches first; parquet min/max stats on
-  *     starttime/endtime give the reference's indexed-time-column
-  *     pushdown for free.
-  *   - `updateIndex` is incremental via the files' modification time
-  *     (`_metadata.file_modification_time`) — the mtime watermark
-  *     contract of `_unindexed_iterator` (`bank/core.py:193-210`).
+  *     (NSLC + starttime + sampling_period + samples array);
+  *     `root/index/` holds the summary index (one row per segment or
+  *     record, no samples) — the HDF5 index replacement.
+  *   - `segmentFormat` picks the segment store:
+  *     - `"parquet"` (default): parquet files partitioned by
+  *       (network, station);
+  *     - `"mseed"`: real miniSEED 2.x record files — the
+  *       `put_waveforms` interop contract (`wavebank.py:708-754` writes
+  *       miniSEED so external tools can read the archive back);
+  *     - `"gsg"`: this engine's own fixed-layout record files.
+  *     The two record formats share one V2 segment source
+  *     ([[graft.sources.SegmentDataSource]], one codec per format):
+  *     staged writes, header-only index builds, record-boundary splits,
+  *     `path`-pruned reads and counted corrupt-record skips, so queries
+  *     behave identically over every store.
+  *   - the index is small relative to data and is what every query
+  *     touches first; parquet min/max stats on starttime/endtime give
+  *     the reference's indexed-time-column pushdown for free.
+  *   - `updateIndex` is incremental via the files' modification time —
+  *     the mtime watermark contract of `_unindexed_iterator`
+  *     (`bank/core.py:193-210`).
   *   - `txIndex = true` stores the index through [[TxTable]] instead of
   *     a plain parquet directory: atomic multi-writer commits, snapshot
   *     reads, time travel and compaction — the concurrent-producer
   *     contract the reference's single-process HDF5 index can't offer.
-  *   - `segmentFormat = "gsg"` stores segments as real GSG record files
-  *     through the V2 sink instead of parquet — the `put_waveforms`
-  *     interop contract (`wavebank.py:708-754` writes real miniSEED so
-  *     external tools can read the archive back); queries and the
-  *     index build go through the V2 scan (header-only summaries,
-  *     record-boundary splits) and behave identically.
   */
 class WaveBank(spark: SparkSession, root: String,
                txIndex: Boolean = false,
@@ -40,10 +45,8 @@ class WaveBank(spark: SparkSession, root: String,
   require(Seq("parquet", "gsg", "mseed").contains(segmentFormat),
     s"segmentFormat must be parquet, gsg or mseed, got $segmentFormat")
 
-  /** The record formats ride the shared V2 segment-source surface:
-    * same schema, same header-only scans, same staged sink — "mseed"
-    * additionally interoperates with external SEED tooling
-    * ([[graft.sources.MiniSeedDataSource]]).
+  /** The record formats ("gsg", "mseed") read and write through the
+    * shared V2 segment source; only the record codec differs.
     */
   private val v2Format: Boolean = segmentFormat != "parquet"
 
@@ -623,26 +626,17 @@ class WaveBank(spark: SparkSession, root: String,
   /** Driver-side (path → mtime ms) listing of segment files newer than
     * the watermark — the V2 formats push the watermark into file
     * listing but don't surface mtime as a column, and the index needs
-    * it for modified-file detection. Same recursive walk, hidden-path
-    * rule and −1 ms slack as the V2 scan's own planning (so the map
-    * covers every file the scan returns); incremental-batch-sized by
-    * the watermark contract.
+    * it for modified-file detection. Lists through the scan's own
+    * listing with the same −1 ms slack, so the map covers every file
+    * the scan returns; incremental-batch-sized by the watermark
+    * contract.
     */
   private def freshFileMtimes(lastIndexedNs: Long): DataFrame = {
     import spark.implicits._
-    val fs = hadoopFs
     val cut = lastIndexedNs / 1000000L - 1
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def hidden(p: org.apache.hadoop.fs.Path): Boolean =
-      p.getName.startsWith(".") || p.getName.startsWith("_")
-    def walk(st: org.apache.hadoop.fs.FileStatus): Unit =
-      if (hidden(st.getPath)) ()
-      else if (st.isDirectory) fs.listStatus(st.getPath).foreach(walk)
-      else if (st.getModificationTime > cut)
-        out += ((st.getPath.toString, st.getModificationTime))
-    val p = new org.apache.hadoop.fs.Path(segmentsPath)
-    if (fs.exists(p)) fs.listStatus(p).foreach(walk)
-    out.toSeq.toDF("path", "mtime_ms")
+    graft.sources.SegmentSource.listFiles(segmentsPath, 0, Some(cut), None)
+      .map(st => (st.getPath.toString, st.getModificationTime))
+      .toDF("path", "mtime_ms")
   }
 
   /** (Re)build the summary index from segment files newer than the last

@@ -175,9 +175,10 @@ object Lexical {
     * CANDIDATE row — 234M libm calls at the 10⁶ flat geometry.
     * Hoisting the ln to the small side is VALUE-identical (the same
     * double multiplies in the same order), so every oracle hash is
-    * unchanged. Honest measurement (Bm25Debug, same day): the exact
-    * traversal's LOCAL wall does not move (77–88 s either way — the
-    * per-(query, doc) collect_list fold and its shuffle dominate);
+    * unchanged. Honest measurement (same day; BASELINE.md "BM25
+    * lexical retrieval"): the exact traversal's LOCAL wall does not
+    * move (77–88 s either way — the per-(query, doc) collect_list fold
+    * and its shuffle dominate);
     * the hoist is kept for what it provably removes at scale, 10⁸+
     * libm calls per 10⁶-doc query batch on the candidate hot path.
     * Static per (term, doc) given the corpus stats, which is what

@@ -6,11 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Header-only fast summarize of binary trace files — the libmseed
   * scan pattern (obsplus `utils/mseed.py:70-112`: read headers, never
-  * samples) over a simple fixed-layout record format:
-  *
-  *   magic "GSG1" | net,sta,loc,cha (4×8 bytes, space-padded ASCII) |
-  *   starttime ns (i64) | sampling_period ns (i64) | n (i32) |
-  *   n × f64 samples
+  * samples) over the fixed-layout gsg record format ([[GsgCodec]]).
   *
   * Reading goes through Spark's `binaryFile` source + a partition-local
   * parser — the DataSource-V2-shaped path: file listing, partition
@@ -20,8 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object BinarySegmentSource {
 
-  val Magic = "GSG1"
-  val HeaderLen: Int = 4 + 4 * 8 + 8 + 8 + 4
+  import GsgCodec.HeaderLen
 
   case class Header(network: String, station: String, location: String,
                     channel: String, starttime: Long, sampling_period: Long,
@@ -30,33 +25,29 @@ object BinarySegmentSource {
                      channel: String, starttime: Long, sampling_period: Long,
                      samples: Array[Double], path: String)
 
-  def recordBytes(seg: Segment): Array[Byte] = {
-    val buf = ByteBuffer.allocate(HeaderLen + 8 * seg.samples.length)
-      .order(ByteOrder.BIG_ENDIAN)
-    buf.put(Magic.getBytes("ASCII"))
-    Seq(seg.network, seg.station, seg.location, seg.channel)
-      .foreach(s => buf.put(s.padTo(8, ' ').take(8).getBytes("ASCII")))
-    buf.putLong(seg.starttime).putLong(seg.sampling_period)
-    buf.putInt(seg.samples.length)
-    seg.samples.foreach(buf.putDouble)
-    buf.array()
-  }
+  /** One record in the codec's framing; codes longer than 8 chars are
+    * cut to 8 (fixture leniency — the V2 sink rejects them instead).
+    */
+  def recordBytes(seg: Segment): Array[Byte] =
+    GsgCodec.recordBytes(seg.network.take(8), seg.station.take(8),
+      seg.location.take(8), seg.channel.take(8), seg.starttime,
+      seg.sampling_period, seg.samples)
 
   def writeFile(path: java.nio.file.Path, seg: Segment): Unit =
     java.nio.file.Files.write(path, recordBytes(seg))
 
   /** Multi-record file: records are simply concatenated — each header's
     * sample count chains to the next record's offset (the multi-trace
-    * mseed file shape; [[GsgDataSource]] split-plans these).
+    * mseed file shape; the gsg source split-plans these).
     */
   def writeMultiRecordFile(path: java.nio.file.Path, segs: Seq[Segment]): Unit =
     java.nio.file.Files.write(path,
       segs.map(recordBytes).foldLeft(Array.empty[Byte])(_ ++ _))
 
   // one parser for the format (shared with the V2 source): magic +
-  // sample-count validation live in GsgDataSource.parseHeader
+  // sample-count validation live in GsgCodec.parseHeader
   private def parseHeader(bytes: Array[Byte], path: String): Option[Header] =
-    GsgDataSource.parseHeader(bytes).map(h =>
+    GsgCodec.parseHeader(bytes).map(h =>
       Header(h.network, h.station, h.location, h.channel,
         h.starttime, h.samplingPeriod, h.n, path))
 
@@ -129,7 +120,7 @@ object BinarySegmentSource {
     * `samples` out of the read schema, so the reader header-hops and
     * payload bytes are never read — plus record-boundary splits for
     * oversized multi-trace files and small-file coalescing
-    * ([[GsgDataSource]]). Prefer this path; `summaryIndex` remains as
+    * ([[SegmentDataSource]]). Prefer this path; `summaryIndex` remains as
     * the dependency-free fallback shape.
     */
   def summaryIndexV2(spark: SparkSession, dir: String): DataFrame =

@@ -8,7 +8,7 @@ import java.nio.{ByteBuffer, ByteOrder}
   * `bank/wavebank.py:708-754`), implemented from the public SEED
   * Manual v2.4 (chapter 8 fixed header, Appendix A blockette 1000,
   * Appendix B Steim-1/2 compression). Pure byte-level codec — the
-  * Spark surface lives in [[MiniSeedDataSource]].
+  * Spark surface is [[MiniSeedCodec]] in the shared segment source.
   *
   * Format essentials this codec honors:
   *   - fixed-length records, each self-describing: 48-byte fixed data

@@ -13,7 +13,8 @@ import org.apache.spark.storage.StorageLevel
   * same conf also feeds `repartition(col(...))` inside the static
   * store's cache layout, so setting it at the WRONG time collapses the
   * cached store to `n` partitions and the per-trigger probe loses its
-  * scan parallelism (the measured 65 s how-not-to, AdcStreamDebug).
+  * scan parallelism (the measured 65 s how-not-to, BASELINE.md
+  * "Streaming IVFADC serving", round 13).
   *
   * [[pin]] makes the ordering impossible to get wrong from the
   * builders: it MATERIALIZES the persisted static side first — pinning

@@ -328,10 +328,11 @@ object StreamingSimilarity {
     // join needs anyway, so the shuffle ships the 256 B residual, not
     // the 16 KB table. Measured (64-cell ADCSTREAM, same run): stream
     // 36.3 → 19.5 s against batch 5.2 s — the gap fell 7.0× → 3.8×,
-    // and the AdcStreamDebug stage profile shows the remaining wall is
-    // micro-batch machinery (state-store commits and serial sub-1 s
-    // stages with CPU ≪ wall), not per-candidate compute: the
-    // join+score stage runs at CPU parity with the batch heaps.
+    // and the stage profile (BASELINE.md "Streaming IVFADC serving")
+    // shows the remaining wall is micro-batch machinery (state-store
+    // commits and serial sub-1 s stages with CPU ≪ wall), not
+    // per-candidate compute: the join+score stage runs at CPU parity
+    // with the batch heaps.
     val probesT = probes
       .repartition(col("cell"))
       .withColumn("tbl", call_function("adc_table", col("qr"), cbLit))

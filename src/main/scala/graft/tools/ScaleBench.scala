@@ -2012,7 +2012,8 @@ object ScaleBench {
       // machinery's overhead vs the flat fold. Drop the bm25f run's
       // cached postings first: leaving an ~80M-row cache resident
       // starves the control's sort buffers and read 350 s where a
-      // clean run reads ~80 s (measured, Bm25Debug — the caches
+      // clean run reads ~80 s (measured; BASELINE.md "BM25 lexical
+      // retrieval" records the attribution A/B — the caches
       // themselves are at parity with the uncached form)
       spark.catalog.clearCache()
       val t1 = System.nanoTime()

@@ -1,6 +1,7 @@
 package graft
 
-import graft.sources.BinarySegmentSource.{Segment, writeFile, writeMultiRecordFile}
+import graft.sources.BinarySegmentSource.{Segment, recordBytes, writeFile, writeMultiRecordFile}
+import graft.sources.MiniSeed
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
@@ -9,6 +10,8 @@ import scala.collection.JavaConverters._
 
 /** The gsg DataSource V2: record-boundary split planning, small-file
   * coalescing, in-reader column pruning and header filter pushdown.
+  * The contract cases every segment format shares (listing, coalescing,
+  * staged writes, truncation) run once per format.
   */
 class GsgSourceSpec extends SparkSpec {
   import spark.implicits._
@@ -19,7 +22,22 @@ class GsgSourceSpec extends SparkSpec {
                   n: Int, fill: Double): Segment =
     Segment(net, sta, "", cha, t0, 10L, Array.fill(n)(fill), "")
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec =
+  /** The formats of the shared segment source. */
+  private val Formats = Seq("gsg", "mseed")
+
+  /** Time unit of a format's fixtures: miniSEED keeps start times on a
+    * 100 µs grid, so its fixtures scale the small integer times.
+    */
+  private def grid(fmt: String): Long = if (fmt == "mseed") 100000L else 1L
+
+  /** One record (file) of `s` in the format's own framing. */
+  private def fixture(fmt: String, s: Segment): Array[Byte] = fmt match {
+    case "gsg" => recordBytes(s)
+    case "mseed" => MiniSeed.encode(s.network, s.station, s.location,
+      s.channel, s.starttime * grid(fmt), s.sampling_period, s.samples)
+  }
+
+  private def scanOf(df: org.apache.spark.sql.Dataset[_]): BatchScanExec =
     df.queryExecution.executedPlan.collectFirst {
       case b: BatchScanExec => b
     }.getOrElse(fail("no BatchScanExec in plan: " +
@@ -63,13 +81,15 @@ class GsgSourceSpec extends SparkSpec {
   }
 
   test("small files coalesce into few partitions") {
-    val dir = tmp()
-    (0 until 60).foreach(i =>
-      writeFile(dir.resolve(f"f$i%03d.gsg"), seg("N1", s"S$i", "BHZ", i, 5, 1.0)))
-    val df = spark.read.format("gsg").load(dir.toString)
-    assert(df.count() == 60)
-    assert(df.rdd.getNumPartitions <= 4,
-      s"60 tiny files should share tasks, got ${df.rdd.getNumPartitions}")
+    Formats.foreach { fmt => withClue(s"[$fmt] ") {
+      val dir = tmp()
+      (0 until 60).foreach(i => Files.write(dir.resolve(f"f$i%03d.$fmt"),
+        fixture(fmt, seg("N1", s"S$i", "BHZ", i, 5, 1.0))))
+      val df = spark.read.format(fmt).load(dir.toString)
+      assert(df.count() == 60)
+      assert(df.rdd.getNumPartitions <= 4,
+        s"60 tiny files should share tasks, got ${df.rdd.getNumPartitions}")
+    }}
   }
 
   test("column pruning drops samples from the read schema") {
@@ -110,7 +130,14 @@ class GsgSourceSpec extends SparkSpec {
       seg("N1", "S8", "BHZ", 6L, 100, 2.0)).take(100)
     Files.write(dir.resolve("tail.gsg"), goodBytes ++ truncated)
     val df = spark.read.format("gsg").load(dir.toString)
-    assert(df.select("station").as[String].collect().toSet == Set("S1", "S9"))
+    val stations = df.select("station").as[String]
+    assert(stations.collect().toSet == Set("S1", "S9"))
+    // both rejects are warned AND counted: the garbage file and the
+    // torn tail land in the dir's skip counters and the scan's metric
+    val (recs, _) = graft.sources.SegmentSource.skipCounters("gsg", dir.toString)
+    assert(recs.value >= 2, s"skippedRecords = ${recs.value}")
+    val skipped = scanOf(stations).metrics("gsgSkippedRecords").value
+    assert(skipped > 0, s"gsgSkippedRecords = $skipped")
   }
 
   test("summaryIndexV2 prunes to a header-only scan and matches summaryIndex") {
@@ -219,20 +246,23 @@ class GsgSourceSpec extends SparkSpec {
   }
 
   test("write: overwrite truncates recursively — subdirectory files don't survive") {
-    val dir = tmp()
-    // the scan walks subdirectories; truncate must purge them too or a
-    // nested segment would re-surface after an overwrite
-    val sub = dir.resolve("nested")
-    Files.createDirectories(sub)
-    writeFile(sub.resolve("old.gsg"), seg("N1", "OLD", "BHZ", 0L, 4, 1.0))
-    val all = () => spark.read.format("gsg").load(dir.toString)
-      .select("station").as[String].collect().toSet
-    assert(all() == Set("OLD"))
-    Seq(("N1", "NEW", "", "BHZ", 0L, 10L, Array(1.0)))
-      .toDF("network", "station", "location", "channel",
-        "starttime", "sampling_period", "samples")
-      .write.format("gsg").mode("overwrite").save(dir.toString)
-    assert(all() == Set("NEW"))
+    Formats.foreach { fmt => withClue(s"[$fmt] ") {
+      val dir = tmp()
+      // the scan walks subdirectories; truncate must purge them too or a
+      // nested segment would re-surface after an overwrite
+      val sub = dir.resolve("nested")
+      Files.createDirectories(sub)
+      Files.write(sub.resolve(s"old.$fmt"),
+        fixture(fmt, seg("N1", "OLD", "BHZ", 0L, 4, 1.0)))
+      val all = () => spark.read.format(fmt).load(dir.toString)
+        .select("station").as[String].collect().toSet
+      assert(all() == Set("OLD"))
+      Seq(("N1", "NEW", "", "BHZ", 0L, 10L, Array(1.0)))
+        .toDF("network", "station", "location", "channel",
+          "starttime", "sampling_period", "samples")
+        .write.format(fmt).mode("overwrite").save(dir.toString)
+      assert(all() == Set("NEW"))
+    }}
   }
 
   test("write: codes that cannot round-trip fail fast instead of truncating") {
@@ -274,51 +304,55 @@ class GsgSourceSpec extends SparkSpec {
   }
 
   test("write: concurrent appends both land; staged files are invisible to readers") {
-    val dir = tmp()
-    // a leftover staged file with VALID record bytes (a crashed writer)
-    // must never surface in a scan — hidden-path contract
-    Files.write(dir.resolve(".staged-dead-writer-0.gsg"),
-      graft.sources.BinarySegmentSource.recordBytes(
-        seg("NX", "GHOST", "BHZ", 0L, 10, 6.66)))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val latch = new java.util.concurrent.CountDownLatch(1)
-    val errs = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[Throwable]())
-    (0 until 2).foreach { w =>
-      pool.submit(new Runnable {
-        override def run(): Unit = {
-          latch.await()
-          try Seq(("N1", s"W$w", "", "BHZ", w.toLong, 10L, Array(w.toDouble)))
-            .toDF("network", "station", "location", "channel",
-              "starttime", "sampling_period", "samples")
-            .write.format("gsg").mode("append").save(dir.toString)
-          catch { case e: Throwable => errs.add(e) }
-        }
-      })
-    }
-    latch.countDown()
-    pool.shutdown()
-    assert(pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS))
-    assert(errs.isEmpty, errs.toString)
-    val stations = spark.read.format("gsg").load(dir.toString)
-      .select("station").as[String].collect().toSet
-    assert(stations == Set("W0", "W1"), stations.toString) // no GHOST
+    Formats.foreach { fmt => withClue(s"[$fmt] ") {
+      val dir = tmp()
+      // a leftover staged file with VALID record bytes (a crashed writer)
+      // must never surface in a scan — hidden-path contract
+      Files.write(dir.resolve(s".staged-dead-writer-0.$fmt"),
+        fixture(fmt, seg("NX", "GHOST", "BHZ", 0L, 10, 6.66)))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val latch = new java.util.concurrent.CountDownLatch(1)
+      val errs = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[Throwable]())
+      (0 until 2).foreach { w =>
+        pool.submit(new Runnable {
+          override def run(): Unit = {
+            latch.await()
+            try Seq(("N1", s"W$w", "", "BHZ", w * grid(fmt), 10L, Array(w.toDouble)))
+              .toDF("network", "station", "location", "channel",
+                "starttime", "sampling_period", "samples")
+              .write.format(fmt).mode("append").save(dir.toString)
+            catch { case e: Throwable => errs.add(e) }
+          }
+        })
+      }
+      latch.countDown()
+      pool.shutdown()
+      assert(pool.awaitTermination(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(errs.isEmpty, errs.toString)
+      val stations = spark.read.format(fmt).load(dir.toString)
+        .select("station").as[String].collect().toSet
+      assert(stations == Set("W0", "W1"), stations.toString) // no GHOST
+    }}
   }
 
   test("modifiedAfterMs prunes stale files from the listing") {
-    val dir = tmp()
-    writeFile(dir.resolve("old.gsg"), seg("N1", "S1", "BHZ", 0L, 10, 1.0))
-    Files.setLastModifiedTime(dir.resolve("old.gsg"),
-      java.nio.file.attribute.FileTime.fromMillis(1000L))
-    writeFile(dir.resolve("new.gsg"), seg("N1", "S2", "BHZ", 0L, 10, 2.0))
-    Files.setLastModifiedTime(dir.resolve("new.gsg"),
-      java.nio.file.attribute.FileTime.fromMillis(50000L))
-    val fresh = spark.read.format("gsg")
-      .option("modifiedAfterMs", "10000").load(dir.toString)
-    assert(fresh.select("station").as[String].collect().toSeq == Seq("S2"))
-    val all = spark.read.format("gsg")
-      .option("modifiedAfterMs", "10").load(dir.toString)
-    assert(all.count() == 2)
+    Formats.foreach { fmt => withClue(s"[$fmt] ") {
+      val dir = tmp()
+      val (old, young) = (dir.resolve(s"old.$fmt"), dir.resolve(s"new.$fmt"))
+      Files.write(old, fixture(fmt, seg("N1", "S1", "BHZ", 0L, 10, 1.0)))
+      Files.setLastModifiedTime(old,
+        java.nio.file.attribute.FileTime.fromMillis(1000L))
+      Files.write(young, fixture(fmt, seg("N1", "S2", "BHZ", 0L, 10, 2.0)))
+      Files.setLastModifiedTime(young,
+        java.nio.file.attribute.FileTime.fromMillis(50000L))
+      val fresh = spark.read.format(fmt)
+        .option("modifiedAfterMs", "10000").load(dir.toString)
+      assert(fresh.select("station").as[String].collect().toSeq == Seq("S2"))
+      val all = spark.read.format(fmt)
+        .option("modifiedAfterMs", "10").load(dir.toString)
+      assert(all.count() == 2)
+    }}
   }
 
   test("matches the binaryFile-based readSegments on a mixed archive") {

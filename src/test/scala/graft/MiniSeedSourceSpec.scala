@@ -33,7 +33,7 @@ class MiniSeedSourceSpec extends SparkSpec {
     w.save(dir.toString)
   }
 
-  private def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec =
+  private def scanOf(df: org.apache.spark.sql.Dataset[_]): BatchScanExec =
     df.queryExecution.executedPlan.collectFirst {
       case b: BatchScanExec => b
     }.getOrElse(fail("no BatchScanExec in plan: " +
@@ -191,9 +191,9 @@ class MiniSeedSourceSpec extends SparkSpec {
 
     // full decode: the flipped record fails Steim reverse-integration
     // and is skipped ALONE (fixed reclen preserves framing for KEEP)
-    val decoded = spark.read.format("mseed").load(dir.toString)
-      .select($"station", size($"samples"))
-      .as[(String, Int)].collect().toMap
+    val full = spark.read.format("mseed").load(dir.toString)
+      .select($"station", size($"samples")).as[(String, Int)]
+    val decoded = full.collect().toMap
     assert(decoded.keySet == Set("GOOD", "OK2", "KEEP"), decoded.toString)
     // header-only scan never touches payloads, so it (correctly) still
     // lists the flipped record's header
@@ -204,9 +204,12 @@ class MiniSeedSourceSpec extends SparkSpec {
     // the warn-and-skip contract is COUNTED, not just printed: the
     // garbage file, the torn tail, and the flipped payload all land in
     // the scan's skip accumulators (full-decode pass: 3 skip events)
-    val (recs, bytes) = graft.sources.MiniSeedDataSource.skipCounters(dir.toString)
+    val (recs, bytes) = graft.sources.SegmentSource.skipCounters("mseed", dir.toString)
     assert(recs.value >= 3, s"skippedRecords = ${recs.value}")
     assert(bytes.value >= 512 + 300 + 512, s"skippedBytes = ${bytes.value}")
+    // ... and reach the scan's SQL metric under the name readers use
+    val skipped = scanOf(full).metrics("mseedSkippedRecords").value
+    assert(skipped > 0, s"mseedSkippedRecords = $skipped")
   }
 
   test("blockette chain past the probe resolves through the V2 reader") {
@@ -236,7 +239,7 @@ class MiniSeedSourceSpec extends SparkSpec {
     assert(got.keySet == Set("DEEP", "PLAIN"))
     assert(got("DEEP").head._2 == Array.tabulate(10)(_.toDouble).toSeq)
     assert(got("PLAIN").length == 2)
-    val (recs, _) = graft.sources.MiniSeedDataSource.skipCounters(dir.toString)
+    val (recs, _) = graft.sources.SegmentSource.skipCounters("mseed", dir.toString)
     assert(recs.value == 0, "a deep chain is a re-probe, not a skip")
   }
 
