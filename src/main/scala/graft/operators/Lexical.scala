@@ -119,12 +119,12 @@ object Lexical {
     * surrogate of round 18 (guide §2.3 "narrower types" applied to the
     * fold exchange): the per-(query, doc) score fold only uses its key
     * for ORDERING (key-asc float sum), and rank-asc ≡ term-asc within
-    * a query (`array_sort` orders strings by the same binary UTF8
-    * comparison as `sort_array` / `UTF8String.compareTo` — the
-    * OrderedFoldSum contract), so folds keyed by `tr` sum the same
-    * doubles in the same order with one primitive long per candidate
-    * instead of a cloned term string (buffer allocation + shuffle
-    * bytes on the hottest exchange of the lexical tier).
+    * a query (`array_sort` orders strings by binary UTF8 comparison,
+    * `UTF8String.compareTo` — pinned by OrderedFoldSumSpec), so folds
+    * keyed by `tr` sum the same doubles in the same order with one
+    * primitive long per candidate instead of a cloned term string
+    * (buffer allocation + shuffle bytes on the hottest exchange of the
+    * lexical tier).
     */
   private[graft] def queryTermsRanked(queries: DataFrame, qTextCol: String,
                                       qIdCol: String): DataFrame =
@@ -231,7 +231,8 @@ object Lexical {
     * idf is computed on the QUERY side (≤ |query terms| rows) and rides
     * the broadcast into the sat join, so a df/N refresh never touches
     * the corpus-sized half. contrib = idf × sat (one multiply per
-    * candidate); fold and rank exactly as the monolithic paths.
+    * candidate); the exchange fold and rank tail of every store path
+    * ([[foldExchange]]).
     */
   def bm25TopKFromFactoredStore(sat: DataFrame, dfreq: DataFrame,
                                 nDocs: Long, queries: DataFrame,
@@ -246,35 +247,52 @@ object Lexical {
     * lazy form: the count rides the query-sized broadcast as a column
     * (same doubles — [[bm25Idf]] on a column vs a literal is the same
     * arithmetic), so building the returned plan runs NO job. The
-    * builders that derive n from a stats subtree ([[bm25fTopK]]) use
-    * this to stay lazy end to end.
+    * builders that derive n from a stats subtree ([[bm25fTopK]]) pass
+    * it the same way to stay lazy end to end. A store's row order is
+    * the caller's, so this path folds through the exchange.
     */
   def bm25TopKFromFactoredStore(sat: DataFrame, dfreq: DataFrame,
                                 nDocs: DataFrame, queries: DataFrame,
                                 qTextCol: String, qIdCol: String,
-                                k: Int): DataFrame =
-    bm25TopKFromFactoredStoreImpl(sat, dfreq, nDocs, queries,
-      qTextCol, qIdCol, k, localFold = false)
-
-  private[operators] def bm25TopKFromFactoredStoreImpl(
-      sat: DataFrame, dfreq: DataFrame,
-      nDocs: DataFrame, queries: DataFrame,
-      qTextCol: String, qIdCol: String,
-      k: Int, localFold: Boolean): DataFrame = {
+                                k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
+    foldExchange(factoredCandidates(sat, dfreq, nDocs, queries,
+      qTextCol, qIdCol), k)
+  }
+
+  /** Candidate source of the factored paths: sat rows ⋈ the broadcast
+    * query side, contrib = idf × sat (one multiply per candidate).
+    */
+  private def factoredCandidates(sat: DataFrame, dfreq: DataFrame,
+                                 nDocs: DataFrame, queries: DataFrame,
+                                 qTextCol: String,
+                                 qIdCol: String): DataFrame = {
     graft.plans.GraftExtensions.register(sat.sparkSession)
-    // (q_id, tr, term) — tr is the fold-key surrogate
-    // ([[queryTermsRanked]], round 18)
+    sat.join(bm25QuerySide(dfreq, nDocs.select(col("n_docs")), queries,
+        qTextCol, qIdCol), Seq("term"))
+      .withColumn("contrib", col("idf") * col("sat"))
+  }
+
+  /** The query side every idf-on-the-fly BM25 path joins: (q_id, term,
+    * tr, idf) plus the stats frame's other columns, broadcast. Query
+    * terms are distinct per query — BM25's standard bag-of-terms query
+    * treats repeats as one term — and `tr` is the fold-key surrogate
+    * ([[queryTermsRanked]]). df is sliced to the query's terms FIRST
+    * (a vocabulary-sized df never broadcasts); `stats` is the ONE-ROW
+    * frame holding `n_docs` (and `avgdl` where the path needs it),
+    * threaded as a column so building the plan runs no job.
+    */
+  private def bm25QuerySide(dfreq: DataFrame, stats: DataFrame,
+                            queries: DataFrame, qTextCol: String,
+                            qIdCol: String): DataFrame = {
     val qTerms = queryTermsRanked(queries, qTextCol, qIdCol)
     val qDf = dfreq.join(broadcast(qTerms.select("term").distinct()),
       Seq("term"))
-    val qSide = broadcast(qTerms.join(qDf, Seq("term"))
-      .crossJoin(broadcast(nDocs.select(col("n_docs"))))
-      .select(col("q_id"), col("term"), col("tr"),
-        bm25Idf(col("n_docs"), col("df")).as("idf")))
-    val cand = sat.join(qSide, Seq("term"))
-      .withColumn("contrib", col("idf") * col("sat"))
-    foldAndRank(cand, k, localFold)
+    broadcast(qTerms.join(qDf, Seq("term"))
+      .crossJoin(broadcast(stats))
+      .select(Seq(col("q_id"), col("term"), col("tr"),
+        bm25Idf(col("n_docs"), col("df")).as("idf")) ++
+        stats.columns.filterNot(_ == "n_docs").map(col): _*))
   }
 
   // ---- BM25F: weighted multi-field scoring (Robertson, Zaragoza &
@@ -293,70 +311,22 @@ object Lexical {
   final case class FieldSpec(textCol: String, weight: Double,
                              b: Double = 0.75)
 
-  /** Multi-field inverted postings: (`field` int — the index into
-    * `fields`, `term`, `doc_id`, `dl` — THAT field's token length,
-    * `tf`). ONE corpus scan for all fields (the per-row hash-count
-    * device of [[postings]], run per field inside the same pass) — no
-    * shuffle.
-    */
-  def postingsFields(docs: DataFrame, fields: Seq[FieldSpec],
-                     idCol: String): DataFrame = {
-    require(fields.nonEmpty, "postingsFields: no fields")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs
-      .select(col(idCol).cast("long"),
-        array(fields.map(f => TextFunctions.tokens(col(f.textCol))): _*))
-      .as[(Long, Seq[Seq[String]])]
-      .mapPartitions(_.flatMap { case (id, fieldToks) =>
-        fieldToks.iterator.zipWithIndex.flatMap { case (toks, fi) =>
-          val dl = toks.length.toLong
-          val m = new java.util.LinkedHashMap[String, Long]()
-          toks.foreach(t => m.merge(t, 1L, (a, b) => a + b))
-          val out = Vector.newBuilder[(Int, String, Long, Long, Long)]
-          m.forEach((t, c) => out += ((fi, t, id, dl, c)))
-          out.result()
-        }
-      })
-      .toDF("field", "term", "doc_id", "dl", "tf")
-  }
-
-  /** Per-field corpus stats: (`field`, `n_docs`, `avgdl`) — one narrow
-    * aggregation pass (every doc contributes one length per field; the
-    * integer sums are exact, the division correctly rounded — the
-    * [[corpusStats]] arithmetic per field).
-    */
-  def fieldStats(docs: DataFrame, fields: Seq[FieldSpec]): DataFrame = {
-    require(fields.nonEmpty, "fieldStats: no fields")
-    val perField = fields.zipWithIndex.map { case (f, i) =>
-      docs.select(lit(i).as("field"),
-        size(TextFunctions.tokens(col(f.textCol))).cast("long").as("dl"))
-    }.reduce(_ unionByName _)
-    perField.groupBy("field")
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") /
-          count(lit(1)).cast("double")).as("avgdl"))
-  }
-
   /** PACKED multi-field postings (round 17, guide §2.4): ONE row per
     * (term, doc) — `term`, `doc_id`, `dls` (every field's token length
     * for this doc, field-indexed), `entries`
     * (array<struct<field:int, tf:long>>, FIELD-ASCENDING, only fields
-    * where the term occurs). Same scan-local build as
-    * [[postingsFields]] (a document's per-field term→tf maps are
-    * row-local state), but the BM25F pseudo-frequency fold that
-    * [[satFromPostF]] pays one candidate-volume exchange for — the
-    * ENTIRE multi-field postings volume, 42.98 M rows at the 10⁶-doc
-    * BASELINE bm25fskew geometry, 429.65 M at 10⁷ — becomes a pure
-    * projection: the (term, doc) row already holds every field's tf in
-    * fold order. Rows are distinct (term, doc), so any-field df is a
-    * plain count (the [[docFreqAnyField]] distinct disappears too);
+    * where the term occurs). Scan-local build: a document's per-field
+    * term→tf maps are row-local state. The BM25F pseudo-frequency
+    * fold, which the retired flat one-row-per-(field, term, doc)
+    * layout paid one exchange of the ENTIRE multi-field postings
+    * volume for (42.98 M rows at the 10⁶-doc BASELINE bm25fskew
+    * geometry, 429.65 M at 10⁷), is a pure projection here: the
+    * (term, doc) row already holds every field's tf in fold order.
+    * Rows are distinct (term, doc), so any-field df is a plain count;
     * (doc_id, dls) is distinct per doc, so field stats fall out of a
-    * narrow distinct exactly like [[corpusStatsFromPostings]].
-    * The FLAT layout stays the maintained-store format
-    * ([[graft.streaming.StreamingLexicalIndex]] — its generation
-    * parquet and delta algebra are keyed on it); this one feeds the
-    * one-shot batch builders.
+    * narrow distinct exactly like [[corpusStatsFromPostings]]. The
+    * one multi-field layout: the one-shot builders and the maintained
+    * store ([[graft.streaming.StreamingLexicalIndex]]) both use it.
     */
   def postingsFieldsPacked(docs: DataFrame, fields: Seq[FieldSpec],
                            idCol: String): DataFrame = {
@@ -383,7 +353,7 @@ object Lexical {
         m.forEach { (t, tfs) =>
           val es = Vector.newBuilder[(Int, Long)]
           var f = 0
-          while (f < nf) { // field-asc — the satFromPostF fold order
+          while (f < nf) { // field-asc — the satFromPacked fold order
             if (tfs(f) > 0L) es += ((f, tfs(f)))
             f += 1
           }
@@ -399,10 +369,10 @@ object Lexical {
           .as("entries"))
   }
 
-  /** [[fieldStatsFromPostings]] off the PACKED layout: (doc_id, dls)
-    * is distinct per doc and dls holds every field's length, so the
-    * same exact integer sums fall out of one narrow distinct +
-    * posexplode (position IS the field index).
+  /** Per-field corpus stats (`field`, `n_docs`, `avgdl`) off the
+    * PACKED layout: (doc_id, dls) is distinct per doc and dls holds
+    * every field's length, so the exact integer sums fall out of one
+    * narrow distinct + posexplode (position IS the field index).
     */
   def fieldStatsFromPacked(packed: DataFrame): DataFrame =
     packed.select(col("doc_id"), col("dls")).distinct()
@@ -412,20 +382,20 @@ object Lexical {
         (sum(col("dl")).cast("double") /
           count(lit(1)).cast("double")).as("avgdl"))
 
-  /** [[docFreqAnyField]] off the PACKED layout — rows are already
-    * distinct (term, doc), so df is a plain map-side-combined count
-    * (the flat layout's distinct exchange disappears).
+  /** BM25F document frequency (a document contains a term if ANY
+    * field does) off the PACKED layout — rows are already distinct
+    * (term, doc), so df is a plain map-side-combined count.
     */
   def docFreqPacked(packed: DataFrame): DataFrame =
     packed.groupBy("term").agg(count(lit(1)).as("df"))
 
-  /** [[satFromPostF]] off the PACKED layout: tf̃ folds SCAN-LOCALLY
-    * over the field-asc `entries` array — the same fc doubles in the
-    * same field-asc order as the flat fold (pinned by LexicalSpec's
-    * flat-vs-packed equality), with ZERO exchange where the flat form
-    * shuffled the entire multi-field postings volume. The per-field
-    * avgdl vector rides a one-row broadcast (lazy — no job at
-    * plan-build).
+  /** The BM25F pseudo-frequency fold + saturation: tf̃ = Σ_f
+    * w_f·tf_f/B_f folds SCAN-LOCALLY over the field-asc `entries`
+    * array (field-asc order pinned — the float sum replays
+    * cross-engine; LexicalSpec's flat-vs-packed equality against the
+    * test-tree flat reference), then sat = tf̃/(k1 + tf̃). The
+    * per-field avgdl vector rides a one-row broadcast (lazy — no job
+    * at plan-build).
     */
   private def satFromPacked(packed: DataFrame, statsF: DataFrame,
                             fields: Seq[FieldSpec],
@@ -453,51 +423,9 @@ object Lexical {
         (col("tfl") / (lit(k1) + col("tfl"))).as("sat"))
   }
 
-  /** Per-field stats derived from a [[postingsFields]] frame instead
-    * of a second tokenization pass — (field, doc_id, dl) is distinct
-    * per (field, doc) inside the postings and every doc emits ≥ 1
-    * posting per field (empty text tokenizes to [""]), so the exact
-    * integer sums fall out of a narrow distinct, the
-    * [[corpusStatsFromPostings]] argument field-wise.
-    */
-  def fieldStatsFromPostings(postF: DataFrame): DataFrame =
-    postF.select(col("field"), col("doc_id"), col("dl")).distinct()
-      .groupBy("field")
-      .agg(count(lit(1)).as("n_docs"),
-        (sum(col("dl")).cast("double") /
-          count(lit(1)).cast("double")).as("avgdl"))
-
-  /** The BM25F pseudo-frequency fold + saturation over a multi-field
-    * postings frame: tf̃ = Σ_f w_f·tf_f/B_f folded in FIELD-asc order
-    * (pinned — the float sum replays cross-engine), then
-    * sat = tf̃/(k1 + tf̃). One candidate-volume shuffle keyed
-    * (term, doc).
-    */
-  private def satFromPostF(postF: DataFrame, statsF: DataFrame,
-                           fields: Seq[FieldSpec],
-                           k1: Double): DataFrame = {
-    val weights = typedLit(fields.map(_.weight))
-    val bs = typedLit(fields.map(_.b))
-    postF.join(broadcast(statsF.select(col("field"), col("avgdl"))),
-        Seq("field"))
-      .withColumn("fc",
-        element_at(weights, col("field") + 1) * col("tf").cast("double") /
-          (lit(1.0) - element_at(bs, col("field") + 1) +
-            element_at(bs, col("field") + 1) *
-              col("dl").cast("double") / col("avgdl")))
-      .groupBy("term", "doc_id")
-      .agg(sort_array(collect_list(struct(col("field"), col("fc"))))
-        .as("fcs"))
-      .withColumn("tfl",
-        aggregate(col("fcs"), lit(0.0),
-          (acc, x) => acc + x.getField("fc")))
-      .select(col("term"), col("doc_id"),
-        (col("tfl") / (lit(k1) + col("tfl"))).as("sat"))
-  }
-
   /** BM25F factored serving store: (`term`, `doc_id`, `sat`) with
     * sat = tf̃/(k1 + tf̃). Serve through [[bm25TopKFromFactoredStore]]
-    * with [[docFreqAnyField]] and the document count.
+    * with [[docFreqPacked]] and the document count.
     */
   def bm25fSatStore(docs: DataFrame, fields: Seq[FieldSpec], idCol: String,
                     k1: Double = 1.2): DataFrame = {
@@ -505,51 +433,20 @@ object Lexical {
     // cached postings (the bm25TopK single-pass contract); rotating
     // persist — see [[persistRotating]] for the lifecycle contract.
     // PACKED layout (round 17): the field fold is scan-local — zero
-    // corpus-sized exchange in the sat build (was the full multi-field
-    // postings volume); sat doubles bit-identical to the flat fold.
+    // corpus-sized exchange in the sat build
     val packed = persistRotating("bm25fSatStore",
       postingsFieldsPacked(docs, fields, idCol))
     satFromPacked(packed, fieldStatsFromPacked(packed), fields, k1)
   }
 
-  /** BM25F document frequency: a document contains a term if ANY field
-    * does — distinct (term, doc) over the multi-field postings.
-    */
-  def docFreqAnyField(postF: DataFrame): DataFrame =
-    postF.select("term", "doc_id").distinct()
-      .groupBy("term").agg(count(lit(1)).as("df"))
-
-  /** BM25F sat store from a maintained multi-field postings frame with
-    * the per-field avgdl vector BAKED — the field-aware twin of
-    * [[bm25SatFromPostings]], and the delta-build primitive of the
-    * BM25F factored generation loop: a document's postings arrive
-    * together (per-doc facts across all fields), so the (term, doc)
-    * field fold never spans batches and an appended postings delta
-    * produces exactly its own sat delta.
-    */
-  def bm25fSatFromPostings(postF: DataFrame, avgdls: Seq[Double],
-                           fields: Seq[FieldSpec],
-                           k1: Double = 1.2): DataFrame = {
-    require(avgdls.length == fields.length,
-      s"avgdls (${avgdls.length}) must match fields (${fields.length})")
-    val spark = postF.sparkSession
-    val statsF = avgdls.zipWithIndex.map { case (a, i) =>
-      spark.range(1).select(lit(i).as("field"), lit(a).as("avgdl"))
-    }.reduce(_ unionByName _)
-    satFromPostF(postF, statsF, fields, k1)
-  }
-
-  /** [[bm25fSatFromPostings]] off the PACKED layout
-    * ([[postingsFieldsPacked]] rows) — round 18: the maintained BM25F
-    * store switched to the packed format, so its generation builds
-    * fold the per-field pseudo-frequency SCAN-LOCALLY over the
-    * field-asc `entries` (zero (term, doc) exchange — the flat form
-    * shuffled the whole multi-field postings volume per refresh) with
-    * the avgdl vector BAKED. Same fc doubles in the same field-asc
-    * order as the flat fold (LexicalSpec's flat-vs-packed equality);
-    * a packed delta batch produces exactly its own sat delta (one row
-    * per (term, doc) — per-doc facts), so the arrival-sized refresh
-    * algebra is unchanged.
+  /** BM25F sat store from a maintained PACKED postings frame
+    * ([[postingsFieldsPacked]] rows) with the per-field avgdl vector
+    * BAKED — the field-aware twin of [[bm25SatFromPostings]] and the
+    * generation-build primitive of the maintained BM25F store: the
+    * pseudo-frequency folds SCAN-LOCALLY over the field-asc `entries`
+    * (zero (term, doc) exchange), and a packed delta batch produces
+    * exactly its own sat delta (one row per (term, doc) — per-doc
+    * facts), so the refresh is arrival-sized.
     */
   def bm25fSatFromPackedPostings(packed: DataFrame, avgdls: Seq[Double],
                                  fields: Seq[FieldSpec],
@@ -602,19 +499,17 @@ object Lexical {
   def bm25fTopK(docs: DataFrame, fields: Seq[FieldSpec], idCol: String,
                 queries: DataFrame, qTextCol: String, qIdCol: String,
                 k: Int, k1: Double = 1.2): DataFrame = {
+    require(k >= 1, s"k must be >= 1: $k")
     // PACKED layout (round 17): the sat side reaches the candidate
-    // join with zero corpus-sized exchange (the flat form shuffled the
-    // whole multi-field postings volume through the field fold first)
+    // join with zero corpus-sized exchange
     val packed = persistRotating("bm25fTopK",
       postingsFieldsPacked(docs, fields, idCol))
     val statsF = fieldStatsFromPacked(packed)
     val sat = satFromPacked(packed, statsF, fields, k1)
-    // in-plan scan-local build ⇒ the fold completes scan-side with no
-    // candidate exchange (foldScanLocal's partition-completeness
-    // argument)
-    bm25TopKFromFactoredStoreImpl(sat, docFreqPacked(packed),
-      statsF.filter(col("field") === 0).select(col("n_docs")),
-      queries, qTextCol, qIdCol, k, localFold = true)
+    // in-plan scan-local build ⇒ doc-contiguous candidates by
+    // construction ([[foldScanLocal]])
+    foldScanLocal(factoredCandidates(sat, docFreqPacked(packed),
+      statsF.filter(col("field") === 0), queries, qTextCol, qIdCol), k)
   }
 
   /** Serving store: (`term`, `doc_id`, `contrib`) with the BM25
@@ -745,15 +640,7 @@ object Lexical {
     require(k >= 1, s"k must be >= 1: $k")
     graft.plans.GraftExtensions.register(store.sparkSession)
     val qTerms = broadcast(queryTermsRanked(queries, qTextCol, qIdCol))
-    val scored = store.join(qTerms, Seq("term"))
-      .groupBy("q_id", "doc_id")
-      // native ordered fold keyed by the per-query term RANK
-      // (round 18, [[queryTermsRanked]]): rank-asc ≡ term-asc, so the
-      // float sum is bit-identical to the term-keyed fold with an
-      // 8-byte primitive key per candidate instead of a cloned string
-      .agg(TopK.orderedFoldSumLong(col("tr"), col("contrib")).as("s"))
-      .withColumn("score", round(col("s"), 6))
-    rankTail(scored, "score", k)
+    foldExchange(store.join(qTerms, Seq("term")), k)
   }
 
   /** EXACT top-k with MaxScore dynamic pruning (Turtle & Flood, IPM'95;
@@ -802,15 +689,8 @@ object Lexical {
                        qIdCol: String, k: Int,
                        dfreq: Option[DataFrame] = None,
                        candBroadcastMaxRows: Long = 4L << 20): DataFrame = {
-    val parts = maxScoreFoldInput(store, truncated, queries,
-      qTextCol, qIdCol, k, dfreq, candBroadcastMaxRows)
-    val scored = parts
-      .groupBy("q_id", "doc_id")
-      // native ordered fold keyed by the per-query term RANK
-      // (round 18, [[queryTermsRanked]]) — bit-identical sum
-      .agg(TopK.orderedFoldSumLong(col("tr"), col("contrib")).as("s"))
-      .withColumn("score", round(col("s"), 6))
-    rankTail(scored, "score", k)
+    foldExchange(maxScoreFoldInput(store, truncated, queries,
+      qTextCol, qIdCol, k, dfreq, candBroadcastMaxRows), k)
   }
 
   /** The pruned fold input of [[bm25TopKMaxScore]]: (q_id, term,
@@ -875,20 +755,16 @@ object Lexical {
     // in the designed regime). θ is bit-identical: truncQ is exactly
     // the store ⋈ broadcast(q_id, term) frame
     // bm25TopKFromContribStore built internally, and the fold/rank
-    // tail below is the same ordered fold → ROUND 6 → rankTail
-    // chain. ub is identical: grouping the q-duplicated rows by term
-    // leaves max(contrib) and the matched-term set unchanged.
+    // tail below is the same [[foldExchange]]. ub is identical:
+    // grouping the q-duplicated rows by term leaves max(contrib) and
+    // the matched-term set unchanged.
     val truncQ = persistRotating("maxScoreFoldInput.truncSlice",
       trunc.join(broadcast(qTerms), Seq("term"))
         .select(col("q_id"), col("doc_id"), col("term"), col("tr"),
           col("contrib")))
     // θ per query: the truncated store's k-th rounded score (absent →
     // no pruning bound for that query). Query-sized.
-    val theta = rankTail(
-        truncQ.groupBy("q_id", "doc_id")
-          .agg(TopK.orderedFoldSumLong(col("tr"), col("contrib")).as("s"))
-          .withColumn("score", round(col("s"), 6)),
-        "score", k)
+    val theta = foldExchange(truncQ, k)
       .filter(col("rank") === k)
       .select(col("q_id"), col("score").as("theta"))
     // per-term upper bounds (already query-sliced — the df discipline:
@@ -1046,15 +922,8 @@ object Lexical {
                        queries: DataFrame,
                        qTextCol: String, qIdCol: String, k: Int,
                        aliveBroadcastMaxRows: Long = 4L << 20): DataFrame = {
-    val parts = blockMaxFoldInput(storeB, truncated, sidecar, stats,
-      queries, qTextCol, qIdCol, k, aliveBroadcastMaxRows)
-    val scored = parts
-      .groupBy("q_id", "doc_id")
-      // native ordered fold keyed by the per-query term RANK
-      // (round 18, [[queryTermsRanked]]) — bit-identical sum
-      .agg(TopK.orderedFoldSumLong(col("tr"), col("contrib")).as("s"))
-      .withColumn("score", round(col("s"), 6))
-    rankTail(scored, "score", k)
+    foldExchange(blockMaxFoldInput(storeB, truncated, sidecar, stats,
+      queries, qTextCol, qIdCol, k, aliveBroadcastMaxRows), k)
   }
 
   /** The pruned fold input of [[bm25TopKBlockMax]] — exposed for the
@@ -1139,17 +1008,16 @@ object Lexical {
     * ascending). Queries scoring zero documents emit nothing (no
     * shared terms ⇒ no candidate rows — standard retrieval semantics).
     *
-    * `post`, `dfreq`, `stats` default to being derived from `corpus`
-    * but accept precomputed frames (the persisted-store serving path —
-    * build once with [[postings]]/[[docFreq]]/[[corpusStats]], serve
-    * many query batches).
+    * The one-shot form builds its postings in-plan and folds
+    * scan-locally ([[foldScanLocal]]); the persisted-store serving path
+    * (build once with [[postings]]/[[docFreq]]/[[corpusStats]], serve
+    * many query batches) is [[bm25TopKFromStore]].
     */
   def bm25TopK(corpus: DataFrame, textCol: String, idCol: String,
                queries: DataFrame, qTextCol: String, qIdCol: String,
                k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    // PRECONDITION: corpus ids unique (the phraseTopK contract note —
-    // round 18); a candidate plan with a shuffle/sort falls back to
-    // the exchange fold automatically (orderBreakerInPlan).
+    require(k >= 1, s"k must be >= 1: $k")
+    // PRECONDITION: corpus ids unique (the [[phraseTopK]] contract note)
     // ONE tokenization pass: df, corpus stats, and the candidate join
     // all read the same cached postings (without the persist each of
     // the three subtrees re-tokenizes the corpus — at 100 TB that is
@@ -1159,51 +1027,39 @@ object Lexical {
     // bm25TopKFromStore with caller-managed persistence instead.
     val post = persistRotating("bm25TopK",
       postings(corpus, textCol, idCol))
-    // in-plan scan-local build ⇒ the fold completes scan-side with no
-    // candidate exchange (foldScanLocal's partition-completeness
-    // argument)
-    bm25TopKFromStoreImpl(post, docFreq(post),
-      corpusStatsFromPostings(post),
-      queries, qTextCol, qIdCol, k, k1, b, localFold = true)
+    // in-plan scan-local build ⇒ doc-contiguous candidates by
+    // construction ([[foldScanLocal]])
+    foldScanLocal(bm25Candidates(post, docFreq(post),
+      corpusStatsFromPostings(post), queries, qTextCol, qIdCol, k1, b), k)
   }
 
   /** [[bm25TopK]] against a prebuilt postings store (the serving
     * shape: postings/df/stats persisted once, query frames arrive).
+    * A store's row order is the caller's (term-sorted files scatter a
+    * document's postings), so this path folds through the exchange.
     */
   def bm25TopKFromStore(post: DataFrame, dfreq: DataFrame, stats: DataFrame,
                         queries: DataFrame, qTextCol: String, qIdCol: String,
                         k: Int, k1: Double = 1.2,
-                        b: Double = 0.75): DataFrame =
-    bm25TopKFromStoreImpl(post, dfreq, stats, queries, qTextCol, qIdCol,
-      k, k1, b, localFold = false)
-
-  private[graft] def bm25TopKFromStoreImpl(post: DataFrame, dfreq: DataFrame,
-                                    stats: DataFrame,
-                                    queries: DataFrame, qTextCol: String,
-                                    qIdCol: String,
-                                    k: Int, k1: Double, b: Double,
-                                    localFold: Boolean): DataFrame = {
+                        b: Double = 0.75): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
+    foldExchange(bm25Candidates(post, dfreq, stats, queries,
+      qTextCol, qIdCol, k1, b), k)
+  }
+
+  /** Candidate source of the raw-postings paths: postings ⋈ the
+    * broadcast query side ([[bm25QuerySide]] over the one-row
+    * (`n_docs`, `avgdl`) stats frame), contrib per candidate.
+    */
+  private def bm25Candidates(post: DataFrame, dfreq: DataFrame,
+                             stats: DataFrame, queries: DataFrame,
+                             qTextCol: String, qIdCol: String,
+                             k1: Double, b: Double): DataFrame = {
     graft.plans.GraftExtensions.register(post.sparkSession)
-    // query terms: distinct per query — BM25's standard bag-of-terms
-    // query treats repeats as one term (qtf weighting is a variant;
-    // distinct keeps the score a set function of the query); `tr` is
-    // the fold-key surrogate ([[queryTermsRanked]], round 18)
-    val qTerms = queryTermsRanked(queries, qTextCol, qIdCol)
-    // df sliced to the query's terms FIRST (vocabulary-sized df never
-    // broadcasts), then the query-sized (q_id, term, df, stats) frame
-    // broadcasts into the postings join
-    val qDf = dfreq.join(broadcast(qTerms.select("term").distinct()),
-      Seq("term"))
-    val qSide = broadcast(qTerms.join(qDf, Seq("term")).crossJoin(stats)
-      .withColumn("idf", bm25Idf(col("n_docs"), col("df"))))
-    val cand = post.join(qSide, Seq("term"))
+    post.join(bm25QuerySide(dfreq, stats, queries, qTextCol, qIdCol),
+        Seq("term"))
       .withColumn("contrib",
-        contribCol(col("tf"), col("dl"), col("idf"),
-          col("avgdl"), k1, b))
-    // per-(query, doc) fold in term-asc order — ≤ |query terms|
-    // entries, float sum order pinned cross-engine
-    foldAndRank(cand, k, localFold)
+        contribCol(col("tf"), col("dl"), col("idf"), col("avgdl"), k1, b))
   }
 
   /** Serving off a MAINTAINED raw postings store
@@ -1359,22 +1215,40 @@ object Lexical {
                              qTextCol: String, qIdCol: String, k: Int,
                              k1: Double = 1.2, b: Double = 0.75,
                              statsOverride: Option[DataFrame] = None)
-      : DataFrame =
-    phraseTopKImpl(post, queries, qTextCol, qIdCol, k, k1, b,
-      statsOverride, scanLocalFold = false)
-
-  private[graft] def phraseTopKImpl(post: DataFrame, queries: DataFrame,
-                             qTextCol: String, qIdCol: String, k: Int,
-                             k1: Double, b: Double,
-                             statsOverride: Option[DataFrame],
-                             scanLocalFold: Boolean): DataFrame = {
+      : DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(post.sparkSession)
     // statsOverride: a one-row (n_docs, avgdl) frame from the exact
     // maintenance sidecar rollup — lets the maintained-store serving
     // path slice `post` down to the phrase's terms without losing the
     // corpus-wide stats (the bm25TopKLive device)
     val stats = statsOverride.getOrElse(corpusStatsFromPostings(post))
+    // the exchange fold: a store's row order is the caller's, so the
+    // packed entries of one (query, doc) meet behind one keyed shuffle
+    val folded = phraseCandidates(post, queries, qTextCol, qIdCol)
+      .groupBy("q_id", "doc_id", "dl", "m")
+      .agg(TopK.phraseTf(col("j"), col("positions"), col("m")).as("tf"))
+      .filter(col("tf") >= 1)
+      .select(col("q_id"), col("doc_id"), col("dl"), col("tf"))
+    phraseRank(folded, stats, k, k1, b)
+  }
+
+  /** Candidate source of the phrase paths: (q_id, doc_id, dl, m, j,
+    * positions) — the phrase's terms' postings, one row per matched
+    * (phrase position j, doc). ONE packed fold follows, positions never
+    * explode: the fold collects the doc's ≤ m matched (j, positions)
+    * entries per (query, doc) and counts the anchors — tf = |{p ∈
+    * positions(j=1) : ∀ entry, p + j − 1 ∈ positions(j)}| — in ONE
+    * native aggregate ([[graft.plans.PhraseTf]], round 17 guide §1.2:
+    * the collect_list → completeness filter → flatten/forall/
+    * array_contains pipeline built a struct-array column per group and
+    * ran three higher-order expression trees over every candidate).
+    * The per-position anchor explode (169 M rows at the 10⁶-doc bench
+    * geometry) never exists.
+    */
+  private def phraseCandidates(post: DataFrame, queries: DataFrame,
+                               qTextCol: String,
+                               qIdCol: String): DataFrame = {
+    graft.plans.GraftExtensions.register(post.sparkSession)
     val ph = queries
       .select(col(qIdCol).cast("long").as("q_id"),
         filter(TextFunctions.tokens(col(qTextCol)),
@@ -1385,39 +1259,19 @@ object Lexical {
         posexplode(col("ph")).as(Seq("j0", "term")))
       .select(col("q_id"), col("m"),
         (col("j0") + 1).cast("long").as("j"), col("term"))
-    // ONE packed fold, positions never explode: collect the doc's ≤ m
-    // matched (j, positions) entries per (query, doc) and count the
-    // anchors — tf = |{p ∈ positions(j=1) : ∀ entry,
-    // p + j − 1 ∈ positions(j)}| — in ONE native aggregate
-    // ([[graft.plans.PhraseTf]], round 17 guide §1.2: the
-    // collect_list → completeness filter → flatten/forall/
-    // array_contains pipeline built a struct-array column per group
-    // and ran three higher-order expression trees over every
-    // candidate; the aggregate is an append per row and one counting
-    // pass per group at eval, incomplete groups returning 0). The only
-    // shuffle is Σ df matched postings rows with their positions
-    // arrays PACKED — the per-position anchor explode (169 M rows at
-    // the 10⁶-doc bench geometry) never exists. For IN-PLAN builds
-    // ([[phraseTopK]]) even that exchange disappears: the candidate
-    // stream is doc-contiguous and partition-complete (the
-    // [[foldScanLocal]] contract), so the fold finishes map-side.
-    val matched = post.join(broadcast(qpe), Seq("term"))
-    // ptf feeds TWO consumers — the per-query df aggregate and the
-    // scoring join — so without a persist the candidate-volume
-    // postings join + packed adjacency fold run TWICE per serve
-    // (round 17, guide §2.4; the sdmTopKFromPostings packed fold
-    // already persists for exactly this reason). ptf itself is
-    // match-sized (docs with ≥ 1 anchor — df(phrase) rows), far below
-    // candidate volume.
-    val folded =
-      if (scanLocalFold && !orderBreakerInPlan(matched))
-        phraseFoldScanLocal(matched)
-      else matched
-        .groupBy("q_id", "doc_id", "dl", "m")
-        .agg(TopK.phraseTf(col("j"), col("positions"), col("m"))
-          .as("tf"))
-        .filter(col("tf") >= 1)
-        .select(col("q_id"), col("doc_id"), col("dl"), col("tf"))
+    post.join(broadcast(qpe), Seq("term"))
+  }
+
+  /** Phrase scoring tail shared by both folds: the folded (q_id,
+    * doc_id, dl, tf) rows score as a pseudo-term through the shared
+    * [[rankTail]]. The fold feeds TWO consumers — the per-query df
+    * aggregate and the scoring join — so it persists (round 17, guide
+    * §2.4), or the candidate-volume postings join + packed fold would
+    * run twice per serve; it is match-sized (docs with ≥ 1 anchor —
+    * df(phrase) rows), far below candidate volume.
+    */
+  private def phraseRank(folded: DataFrame, stats: DataFrame, k: Int,
+                         k1: Double, b: Double): DataFrame = {
     val ptf = persistRotating("phraseTopKFromPostings.ptf", folded)
     val pdf = ptf.groupBy("q_id").agg(count(lit(1)).as("df"))
     val scored = ptf.join(broadcast(pdf), Seq("q_id"))
@@ -1432,16 +1286,15 @@ object Lexical {
   }
 
   /** SCAN-LOCAL phrase fold (round 17, guide §2.4/§8) — the
-    * [[foldScanLocal]] device for the packed phrase aggregation: valid
-    * ONLY when every (q_id, doc_id) group is partition-complete AND
-    * doc-contiguous (the candidate frame derives from an IN-PLAN
+    * [[foldScanLocal]] device for the packed phrase aggregation, called
+    * only by [[phraseTopK]], whose candidates are doc-contiguous and
+    * partition-complete by construction (its own in-plan
     * [[postingsPositional]] build — one document = one input row, its
     * postings emitted consecutively — joined against a broadcast-only
-    * query side). The one-shot [[phraseTopK]] satisfies this by
-    * construction; store-serving paths (term-sorted files — a doc's
-    * postings scattered) keep the exchange fold. What crosses the wire
-    * afterwards is the match-sized (q_id, doc_id, dl, tf) rows — the
-    * candidate-volume positions exchange disappears.
+    * query side). [[phraseTopKFromPostings]] serves stores whose row
+    * order is the caller's and keeps the exchange fold. What crosses
+    * the wire afterwards is the match-sized (q_id, doc_id, dl, tf) rows
+    * — the candidate-volume positions exchange disappears.
     *
     * EQUIVALENCE: per (doc, query) run the entries append in stream
     * order and tf comes from the SAME [[graft.plans.PhraseTf]]
@@ -1471,8 +1324,7 @@ object Lexical {
               val d = cur._2
               require(seen.add(d),
                 s"phraseFoldScanLocal: doc $d revisited within a " +
-                  "partition — the candidate stream is not " +
-                  "doc-contiguous; use the exchange fold for this input")
+                  "partition — the corpus ids are not unique")
               val m = new java.util.LinkedHashMap[java.lang.Long,
                 graft.plans.PhraseTfBuffer]()
               val meta = new java.util.HashMap[java.lang.Long,
@@ -1507,10 +1359,9 @@ object Lexical {
     * via the rotating site cache — repeated serving should build
     * [[postingsPositional]] once with caller-managed persistence and
     * use [[phraseTopKFromPostings]]). The in-plan build satisfies the
-    * scan-local fold's contiguity contract, so the candidate-volume
-    * positions exchange is elided (round 17); a candidate plan that
-    * acquires a shuffle/sort falls back to the exchange fold
-    * automatically ([[orderBreakerInPlan]], round 18).
+    * scan-local fold's contiguity contract whatever the layout of
+    * `docs`, so the candidate-volume positions exchange is elided
+    * ([[phraseFoldScanLocal]]).
     *
     * PRECONDITION (round 18, advisor item): `docs` ids must be UNIQUE
     * — the corpus contract every surface already assumes (stats count
@@ -1523,10 +1374,12 @@ object Lexical {
   def phraseTopK(docs: DataFrame, textCol: String, idCol: String,
                  queries: DataFrame, qTextCol: String, qIdCol: String,
                  k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    require(k >= 1, s"k must be >= 1: $k")
     val post = persistRotating("phraseTopK",
       postingsPositional(docs, textCol, idCol))
-    phraseTopKImpl(post, queries, qTextCol, qIdCol, k, k1, b,
-      statsOverride = None, scanLocalFold = true)
+    phraseRank(phraseFoldScanLocal(
+        phraseCandidates(post, queries, qTextCol, qIdCol)),
+      corpusStatsFromPostings(post), k, k1, b)
   }
 
   /** Sequential-dependence proximity ranking (Metzler & Croft,
@@ -1767,28 +1620,41 @@ object Lexical {
       lambdaT, lambdaO, lambdaU, window, k1, b, rerank)
   }
 
-  /** SCAN-LOCAL per-(query, doc) fold (round 17, guide §2.4/§8) —
-    * valid ONLY when every (q_id, doc_id) group is partition-complete
-    * AND doc-contiguous: the candidate frame derives from an IN-PLAN
-    * scan-local postings build (one document = one input row, so all
-    * its postings are emitted consecutively and stay in its scan
-    * partition) joined against broadcast-only query sides (columnar
-    * cache and broadcast-hash probe both preserve within-partition row
-    * order). The one-shot builders ([[bm25TopK]], [[bm25fTopK]])
-    * satisfy this by construction; serving paths over
-    * persisted/maintained stores (term-sorted files — a doc's postings
-    * scattered) do NOT and keep the exchange fold. Removing the
-    * exchange removes the serve pipeline's only candidate-volume
-    * shuffle: what crosses the wire afterwards is the bounded
-    * rank-tail partials (≤ k per query per partition).
+  /** The exchange fold + rank tail every store-serving BM25-family
+    * top-k shares: one groupBy keyed (q_id, doc_id), the native
+    * `ordered_fold_sum_long` summing each candidate's `contrib` in
+    * per-query term-rank order (`tr`, [[queryTermsRanked]]: rank-asc ≡
+    * term-asc, so the float sum is the term-ordered fold with an 8-byte
+    * primitive key per candidate), ROUND 6, then [[rankTail]]. The
+    * candidates of a store arrive in the store's order (term-sorted
+    * files scatter a document's postings), so their per-(query, doc)
+    * contributions can only meet behind this exchange.
+    */
+  private def foldExchange(cand: DataFrame, k: Int): DataFrame =
+    rankTail(cand.groupBy("q_id", "doc_id")
+      .agg(TopK.orderedFoldSumLong(col("tr"), col("contrib")).as("s"))
+      .withColumn("score", round(col("s"), 6)), "score", k)
+
+  /** SCAN-LOCAL per-(query, doc) fold + rank tail (round 17, guide
+    * §2.4/§8), called only by the one-shot builders ([[bm25TopK]],
+    * [[bm25fTopK]]). Their candidates are their own persisted IN-PLAN
+    * postings (one document = one input row of a scan-local build, so
+    * all its postings are emitted consecutively and stay in its scan
+    * partition, whatever the layout of the input docs) joined to a
+    * broadcast query side (the columnar cache and the broadcast-hash
+    * probe both preserve within-partition row order). Each document's
+    * candidates therefore arrive as ONE consecutive run by
+    * construction, and the fold needs no exchange: what crosses the
+    * wire is the bounded rank-tail partials (≤ k per query per
+    * partition). Every store-serving entry takes [[foldExchange]].
     *
     * EQUIVALENCE: per group, contributions append into the same
     * [[graft.plans.LongFoldBuffer]] the native aggregate uses — keyed
-    * by the per-query term RANK ([[queryTermsRanked]], round 18:
-    * rank-asc ≡ term-asc) — and sum via the same key-asc `orderedSum`:
-    * the same doubles in the same order as the exchange fold. A
-    * contiguity violation fails LOUDLY (per-partition revisit guard),
-    * never splits a group silently.
+    * by the per-query term RANK — and sum via the same key-asc
+    * `orderedSum`: the same doubles in the same order as the exchange
+    * fold. A revisited document (duplicate corpus ids — the builders'
+    * precondition) fails LOUDLY (per-partition revisit guard), never
+    * splits a group silently.
     *
     * MEMORY: live state is one document's matched-query buffers at a
     * time (≤ |query batch|), plus one Long per distinct doc for the
@@ -1798,21 +1664,11 @@ object Lexical {
     * never has that hazard because ObjectHashAggregate falls back to
     * sort-based spilling.)
     */
-  private def foldScanLocal(cand: DataFrame): DataFrame = {
+  private def foldScanLocal(cand: DataFrame, k: Int): DataFrame = {
     val spark = cand.sparkSession
     import spark.implicits._
-    // STREAMING per-DOC fold, not per-partition accumulation: the
-    // candidate stream is DOC-CONTIGUOUS (the postings builders emit a
-    // document's rows consecutively; the columnar cache and the
-    // broadcast-hash probe both preserve within-partition row order),
-    // so all of one doc's (query, term) matches arrive as one run.
-    // Folding a run at a time bounds live state at ≤ |matching
-    // queries| buffers for ONE document — the first cut of this fold
-    // accumulated EVERY candidate group in the partition and OOM'd a
-    // 28 GiB heap at the 10⁶-doc BM25F-skew geometry, exactly the
-    // spill-less-closure hazard the exchange fold's sort-fallback
-    // never has.
-    cand.select(col("q_id"), col("doc_id"), col("tr"), col("contrib"))
+    val folded = cand
+      .select(col("q_id"), col("doc_id"), col("tr"), col("contrib"))
       .as[(Long, Long, Long, Double)]
       .mapPartitions { it =>
         new Iterator[(Long, Long, Double)] {
@@ -1830,8 +1686,7 @@ object Lexical {
               val d = cur._2
               require(seen.add(d),
                 s"foldScanLocal: doc $d revisited within a partition — " +
-                  "the candidate stream is not doc-contiguous; use the " +
-                  "exchange fold for this input")
+                  "the corpus ids are not unique")
               val m = new java.util.LinkedHashMap[java.lang.Long,
                 graft.plans.LongFoldBuffer]()
               while (cur != null && cur._2 == d) {
@@ -1852,50 +1707,7 @@ object Lexical {
         }
       }
       .toDF("q_id", "doc_id", "s")
-  }
-
-  /** PLAN-SHAPE precondition for the scan-local folds (round 18,
-    * verdict item: fallback instead of crash): the doc-contiguity
-    * contract rests on the candidate subtree being shuffle-free —
-    * scan → (columnar cache) → broadcast-hash probes, all of which
-    * preserve within-partition row order. Any ShuffleExchange or Sort
-    * in the candidate's physical plan (a future plan change — e.g. a
-    * non-broadcast join strategy, an explicit repartition upstream)
-    * can scatter or reorder a document's run, which the in-task
-    * revisit guard would turn into a CRASH at scale. Detect it at
-    * plan time and take the exchange fold instead — identical scores,
-    * no candidate-volume surprise (the shuffle is already in the plan;
-    * the fold exchange is one more keyed pass). AQE never introduces
-    * new shuffles (it only resizes or rewrites existing ones), so the
-    * pre-AQE sparkPlan is the sound thing to probe.
-    */
-  private[graft] def orderBreakerInPlan(df: DataFrame): Boolean =
-    df.queryExecution.sparkPlan.exists {
-      case _: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike =>
-        true
-      case _: org.apache.spark.sql.execution.SortExec => true
-      case _ => false
-    }
-
-  /** Shared fold + rank tail: the exchange fold (ordered_fold_sum
-    * behind one groupBy) or, for partition-complete candidate frames,
-    * the scan-local fold — identical scores either way. localFold is
-    * a REQUEST: the plan-shape precondition above can veto it
-    * (falling back to the exchange fold), so callers never crash on a
-    * candidate frame that stopped being doc-contiguous.
-    */
-  private def foldAndRank(cand: DataFrame, k: Int,
-                          localFold: Boolean): DataFrame = {
-    val scored =
-      if (localFold && !orderBreakerInPlan(cand))
-        foldScanLocal(cand).withColumn("score", round(col("s"), 6))
-      else
-        cand.groupBy("q_id", "doc_id")
-          // rank-keyed fold ([[queryTermsRanked]], round 18) — same
-          // doubles in the same order, primitive keys
-          .agg(TopK.orderedFoldSumLong(col("tr"), col("contrib")).as("s"))
-          .withColumn("score", round(col("s"), 6))
-    rankTail(scored, "score", k)
+    rankTail(folded.withColumn("score", round(col("s"), 6)), "score", k)
   }
 
   /** The determinism-critical rank tail every batch top-k surface
@@ -1916,20 +1728,6 @@ object Lexical {
         negate(col("t.d")).as(scoreCol),
         (col("pos") + 1).cast("int").as("rank"))
 
-  /** Reciprocal-rank fusion (Cormack & Clarke SIGIR'09): fuse N ranked
-    * lists into one, score(d) = Σ_r 1/(c + rank_r(d)). Each input
-    * frame carries (`q_id`, `doc_id`, `rank`); frames contribute in
-    * the order given (the fold is position-pinned — contributions
-    * sort by the frame's index, so the float sum is order-
-    * deterministic cross-engine). Output: `q_id`, `doc_id`,
-    * `rrf` (ROUND 9 double), `rank` (int, ties on rounded rrf break
-    * doc-id ascending), top-k per query via the bounded [[TopK]]
-    * aggregate.
-    *
-    * The scale story is the inputs': each ranked frame is already
-    * ≤ Q·k rows, so fusion is query-sized everywhere — union, one
-    * small groupBy, one bounded top-k.
-    */
   /** Score-based fusion (Fox & Shaw SIGIR'94: CombSUM / CombMNZ, with
     * Lee SIGIR'97 min–max normalization) — the score-space complement
     * of rank-space [[rrfFuse]]. Each input frame carries (`q_id`,
@@ -1975,6 +1773,20 @@ object Lexical {
     rankTail(scored, "comb", k)
   }
 
+  /** Reciprocal-rank fusion (Cormack & Clarke SIGIR'09): fuse N ranked
+    * lists into one, score(d) = Σ_r 1/(c + rank_r(d)). Each input
+    * frame carries (`q_id`, `doc_id`, `rank`); frames contribute in
+    * the order given (the fold is position-pinned — contributions
+    * sort by the frame's index, so the float sum is order-
+    * deterministic cross-engine). Output: `q_id`, `doc_id`,
+    * `rrf` (ROUND 9 double), `rank` (int, ties on rounded rrf break
+    * doc-id ascending), top-k per query via the bounded [[TopK]]
+    * aggregate.
+    *
+    * The scale story is the inputs': each ranked frame is already
+    * ≤ Q·k rows, so fusion is query-sized everywhere — union, one
+    * small groupBy, one bounded top-k.
+    */
   def rrfFuse(ranked: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
     require(ranked.nonEmpty, "rrfFuse needs at least one ranked frame")
     require(k >= 1, s"k must be >= 1: $k")

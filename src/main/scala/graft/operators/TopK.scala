@@ -103,23 +103,13 @@ object TopK {
     org.apache.spark.sql.functions.call_function("bounded_topk",
       org.apache.spark.sql.functions.lit(k), d, id)
 
-  /** Native key-ordered float fold ([[graft.plans.OrderedFoldSum]]):
-    * sums `contrib` in key-ascending order from +0.0 — bit-identical
-    * to `aggregate(sort_array(collect_list(struct(key, contrib))),
-    * 0.0, acc + contrib)` in one aggregate, no per-group array column.
-    * Same registration requirement as [[topKNative]].
-    */
-  def orderedFoldSum(key: org.apache.spark.sql.Column,
-                     contrib: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("ordered_fold_sum",
-      key, contrib)
-
-  /** [[orderedFoldSum]] with a primitive BIGINT key
-    * ([[graft.plans.OrderedFoldSumLong]]): bit-identical to
+  /** Native key-ordered float fold with a BIGINT key
+    * ([[graft.plans.OrderedFoldSumLong]]): sums `contrib` in
+    * key-ascending order from +0.0 — bit-identical to
     * `aggregate(sort_array(collect_list(struct(key, ...))), 0.0,
-    * acc + contrib)` when the key is unique per group. Same
-    * registration requirement as [[topKNative]].
+    * acc + contrib)` when the key is unique per group, in one
+    * aggregate with no per-group array column. Same registration
+    * requirement as [[topKNative]].
     */
   def orderedFoldSumLong(key: org.apache.spark.sql.Column,
                          contrib: org.apache.spark.sql.Column)

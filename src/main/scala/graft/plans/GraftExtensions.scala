@@ -21,7 +21,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectFunction(GraftExtensions.adcDistDescriptor)
     e.injectFunction(GraftExtensions.probeBucketsDescriptor)
     e.injectFunction(GraftExtensions.boundedTopKDescriptor)
-    e.injectFunction(GraftExtensions.orderedFoldSumDescriptor)
     e.injectFunction(GraftExtensions.orderedFoldSumLongDescriptor)
     e.injectFunction(GraftExtensions.sdmFeaturesDescriptor)
     e.injectFunction(GraftExtensions.phraseTfDescriptor)
@@ -144,17 +143,6 @@ object GraftExtensions {
     (FunctionIdentifier("bounded_topk"),
       new ExpressionInfo(classOf[BoundedTopK].getName, "bounded_topk"),
       buildBoundedTopK)
-
-  private def buildOrderedFoldSum(exprs: Seq[Expression]): Expression = {
-    require(exprs.length == 2, "ordered_fold_sum(key, contrib)")
-    OrderedFoldSum(exprs.head, exprs(1))
-  }
-
-  val orderedFoldSumDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
-    (FunctionIdentifier("ordered_fold_sum"),
-      new ExpressionInfo(classOf[OrderedFoldSum].getName,
-        "ordered_fold_sum"),
-      buildOrderedFoldSum)
 
   private def buildOrderedFoldSumLong(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 2, "ordered_fold_sum_long(key, contrib)")
@@ -425,10 +413,6 @@ object GraftExtensions {
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         "bounded_topk", buildBoundedTopK, "built-in")
     // round-17 additions, same newest-builder probe
-    if (!spark.sessionState.functionRegistry
-        .functionExists(FunctionIdentifier("ordered_fold_sum")))
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "ordered_fold_sum", buildOrderedFoldSum, "built-in")
     if (!spark.sessionState.functionRegistry
         .functionExists(FunctionIdentifier("phrase_tf")))
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(

@@ -6,192 +6,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.BinaryLike
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.types._
 
-/** Growable (key, contrib) pair buffer for [[OrderedFoldSum]] —
-  * parallel arrays, sorted only once at eval time.
-  */
-final class FoldBuffer(initialCapacity: Int = 8) {
-  var size: Int = 0
-  var keys: Array[UTF8String] = new Array[UTF8String](initialCapacity)
-  var vals: Array[Double] = new Array[Double](initialCapacity)
-
-  def append(k: UTF8String, v: Double): Unit = {
-    if (size == keys.length) {
-      keys = java.util.Arrays.copyOf(keys, size * 2)
-      vals = java.util.Arrays.copyOf(vals, size * 2)
-    }
-    keys(size) = k
-    vals(size) = v
-    size += 1
-  }
-
-  def mergeIn(o: FoldBuffer): FoldBuffer = {
-    var i = 0
-    while (i < o.size) { append(o.keys(i), o.vals(i)); i += 1 }
-    this
-  }
-
-  /** Sum in (key asc, value asc) order from +0.0 — the EXACT float
-    * fold of `aggregate(sort_array(collect_list(struct(key, value))),
-    * 0.0, acc + value)`: sort_array orders struct(string, double)
-    * rows by the string field first (binary UTF8 comparison — exactly
-    * `UTF8String.compareTo`) then the double field
-    * (`java.lang.Double.compare` semantics), and the lambda fold adds
-    * left to right starting at 0.0. Call sites have unique keys per
-    * group, so the value tiebreak never decides a sum — it is matched
-    * anyway so the equivalence is unconditional.
-    */
-  def orderedSum(): Double = {
-    // primitive insertion sort (round 18): groups are ≤ |query terms|
-    // entries, and the boxed-comparator sort allocated per group
-    // dominated eval at 10⁸-group candidate volume. Same total order
-    // — (key asc via UTF8String.compareTo, value asc) — so the fold
-    // order and therefore the float sum are bit-identical. Above 64
-    // entries (a degenerate mega-term query) fall back to the n·log n
-    // comparator sort — same order, no quadratic cliff.
-    val order = new Array[Int](size)
-    var i = 0
-    while (i < size) { order(i) = i; i += 1 }
-    if (size > 64) {
-      val boxed = order.map(Integer.valueOf)
-      java.util.Arrays.sort(boxed, new java.util.Comparator[Integer] {
-        override def compare(a: Integer, b: Integer): Int = {
-          val c = keys(a).compareTo(keys(b))
-          if (c != 0) c else java.lang.Double.compare(vals(a), vals(b))
-        }
-      })
-      var s = 0.0
-      i = 0
-      while (i < size) { s += vals(boxed(i)); i += 1 }
-      return s
-    }
-    i = 1
-    while (i < size) {
-      val oi = order(i)
-      var h = i - 1
-      while (h >= 0 && {
-        val c = keys(order(h)).compareTo(keys(oi))
-        c > 0 || (c == 0 &&
-          java.lang.Double.compare(vals(order(h)), vals(oi)) > 0)
-      }) { order(h + 1) = order(h); h -= 1 }
-      order(h + 1) = oi
-      i += 1
-    }
-    var s = 0.0
-    i = 0
-    while (i < size) { s += vals(order(i)); i += 1 }
-    s
-  }
-}
-
-/** `ordered_fold_sum(key STRING, contrib DOUBLE) -> DOUBLE` — the
-  * determinism-critical per-group score fold of the lexical tier as
-  * ONE native aggregate: contributions sum in key-ascending order from
-  * +0.0, bit-identical to the
-  * `aggregate(sort_array(collect_list(struct(key, contrib))), 0.0,
-  * acc + contrib)` pipeline it replaces (pinned by LexicalSpec's
-  * hand-computed scores and every BM25-family oracle), without
-  * materializing a per-group array column: the old shape paid an
-  * ObjectHashAggregate building struct rows per candidate, a
-  * sort_array pass, and a lambda fold — three expression trees over
-  * every candidate group. Null key or contrib rows are skipped
-  * (collect_list skipped null structs the same way; call sites never
-  * produce them).
-  */
-case class OrderedFoldSum(left: Expression, right: Expression,
-                          mutableAggBufferOffset: Int = 0,
-                          inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[FoldBuffer]
-    with BinaryLike[Expression] {
-
-  override def prettyName: String = "ordered_fold_sum"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == DoubleType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"ordered_fold_sum(key STRING, contrib DOUBLE) — got " +
-          s"(${left.dataType.simpleString}, ${right.dataType.simpleString})")
-
-  override def dataType: DataType = DoubleType
-
-  override def nullable: Boolean = false
-
-  override def createAggregationBuffer(): FoldBuffer = new FoldBuffer()
-
-  // codegen'd input projection — the BoundedTopK device: without it
-  // ObjectAggregation evaluates the children interpreted per row
-  @transient private lazy val inputProj =
-    org.apache.spark.sql.catalyst.expressions.UnsafeProjection
-      .create(Seq(left, right))
-
-  override def update(buf: FoldBuffer, input: InternalRow): FoldBuffer = {
-    val row = inputProj(input)
-    if (!row.isNullAt(0) && !row.isNullAt(1))
-      // the projection reuses its output buffer row to row — the key
-      // bytes must be copied out
-      buf.append(row.getUTF8String(0).clone(), row.getDouble(1))
-    buf
-  }
-
-  override def merge(buf: FoldBuffer, other: FoldBuffer): FoldBuffer =
-    buf.mergeIn(other)
-
-  override def eval(buf: FoldBuffer): Any = buf.orderedSum()
-
-  override def serialize(buf: FoldBuffer): Array[Byte] = {
-    var bytes = 0
-    var i = 0
-    while (i < buf.size) { bytes += 4 + buf.keys(i).numBytes(); i += 1 }
-    val bb = ByteBuffer.allocate(4 + bytes + 8 * buf.size)
-    bb.putInt(buf.size)
-    i = 0
-    while (i < buf.size) {
-      val kb = buf.keys(i).getBytes
-      bb.putInt(kb.length)
-      bb.put(kb)
-      i += 1
-    }
-    i = 0
-    while (i < buf.size) { bb.putDouble(buf.vals(i)); i += 1 }
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): FoldBuffer = {
-    val bb = ByteBuffer.wrap(bytes)
-    val n = bb.getInt()
-    val buf = new FoldBuffer(math.max(8, n))
-    var i = 0
-    while (i < n) {
-      val len = bb.getInt()
-      val kb = new Array[Byte](len)
-      bb.get(kb)
-      buf.keys(i) = UTF8String.fromBytes(kb)
-      i += 1
-    }
-    i = 0
-    while (i < n) { buf.vals(i) = bb.getDouble(); i += 1 }
-    buf.size = n
-    buf
-  }
-
-  override def withNewMutableAggBufferOffset(o: Int): OrderedFoldSum =
-    copy(mutableAggBufferOffset = o)
-
-  override def withNewInputAggBufferOffset(o: Int): OrderedFoldSum =
-    copy(inputAggBufferOffset = o)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): OrderedFoldSum =
-    copy(left = newLeft, right = newRight)
-}
-
 /** Growable (long key, contrib) pair buffer for [[OrderedFoldSumLong]]
-  * — the [[FoldBuffer]] shape with primitive long keys.
+  * — parallel primitive arrays, sorted only once at eval time.
   */
 final class LongFoldBuffer(initialCapacity: Int = 8) {
   var size: Int = 0
@@ -219,12 +37,15 @@ final class LongFoldBuffer(initialCapacity: Int = 8) {
     * ..., value))), 0.0, acc + value)` for call sites whose long key
     * is unique per group (struct sort order ≡ key order there; the
     * value tiebreak is matched anyway so the equivalence is
-    * unconditional, exactly the [[FoldBuffer]] contract).
+    * unconditional).
     */
   def orderedSum(): Double = {
-    // primitive insertion sort — the FoldBuffer rationale (groups are
-    // query-sized; same total order, bit-identical sum); comparator
-    // sort above 64 entries, the same no-quadratic-cliff guard
+    // primitive insertion sort (round 18): groups are ≤ |query terms|
+    // entries, and a boxed-comparator sort allocated per group
+    // dominated eval at 10⁸-group candidate volume. Same total order,
+    // bit-identical sum. Above 64 entries (a degenerate mega-term
+    // query) fall back to the n·log n comparator sort — same order, no
+    // quadratic cliff.
     val order = new Array[Int](size)
     var i = 0
     while (i < size) { order(i) = i; i += 1 }
@@ -261,11 +82,15 @@ final class LongFoldBuffer(initialCapacity: Int = 8) {
 }
 
 /** `ordered_fold_sum_long(key BIGINT, contrib DOUBLE) -> DOUBLE` — the
-  * [[OrderedFoldSum]] contract with a primitive long key: contributions
-  * sum in key-ascending order from +0.0, bit-identical to
-  * `aggregate(sort_array(collect_list(struct(key, ...))), 0.0,
-  * acc + contrib)` when the key is unique per group (every call site —
-  * the SDM rerank first pass folds one entry per query position).
+  * determinism-critical per-group score fold of the lexical tier as ONE
+  * native aggregate: contributions sum in key-ascending order from
+  * +0.0, bit-identical to `aggregate(sort_array(collect_list(struct(key,
+  * ...))), 0.0, acc + contrib)` when the key is unique per group (every
+  * call site: the BM25-family folds key on the per-query term rank, the
+  * SDM rerank first pass on the query position), without materializing
+  * a per-group array column. Null key or contrib rows are skipped
+  * (collect_list skipped null structs the same way; call sites never
+  * produce them).
   */
 case class OrderedFoldSumLong(left: Expression, right: Expression,
                               mutableAggBufferOffset: Int = 0,

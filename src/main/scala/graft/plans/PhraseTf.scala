@@ -37,6 +37,28 @@ final class PhraseTfBuffer(initialCapacity: Int = 4) {
 
 object PhraseTf {
 
+  /** The positions of one input row, copied out of the projection's
+    * reused buffer. A null element fails LOUDLY: a position has no null
+    * meaning, and reading it as 0 (what `toIntArray` does) would invent
+    * or hide a match. `checkNulls` is false when the input type rules
+    * nulls out (every in-plan postings build); a maintained store read
+    * back from parquet types its positions nullable and is checked.
+    */
+  private[plans] def positionsOf(
+      a: org.apache.spark.sql.catalyst.util.ArrayData,
+      checkNulls: Boolean, fn: String): Array[Int] = {
+    if (checkNulls) {
+      var i = 0
+      while (i < a.numElements()) {
+        if (a.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"$fn: null element at index $i of a positions array")
+        i += 1
+      }
+    }
+    a.toIntArray
+  }
+
   /** The phrase anchor count over a group's matched (j, positions)
     * entries — the ONE implementation both the exchange-fold aggregate
     * and the scan-local fold closure call, so the two paths cannot
@@ -110,7 +132,8 @@ object PhraseTf {
   * `array_distinct === m` pre-filter removed), without materializing a
   * per-group struct-array column or running three higher-order
   * expression trees over every candidate. Null inputs are skipped
-  * (call sites never produce them — join output of non-null frames).
+  * (call sites never produce them — join output of non-null frames);
+  * a null ELEMENT of `positions` fails loudly ([[PhraseTf.positionsOf]]).
   */
 case class PhraseTf(first: Expression, second: Expression,
                     third: Expression,
@@ -136,6 +159,12 @@ case class PhraseTf(first: Expression, second: Expression,
 
   override def nullable: Boolean = false
 
+  @transient private lazy val nullablePositions: Boolean =
+    second.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    }
+
   override def createAggregationBuffer(): PhraseTfBuffer =
     new PhraseTfBuffer()
 
@@ -149,8 +178,8 @@ case class PhraseTf(first: Expression, second: Expression,
                       input: InternalRow): PhraseTfBuffer = {
     val row = inputProj(input)
     if (!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(2)) {
-      // toIntArray copies out of the projection's reused buffer
-      buf.append(row.getLong(0), row.getArray(1).toIntArray)
+      buf.append(row.getLong(0),
+        PhraseTf.positionsOf(row.getArray(1), nullablePositions, prettyName))
       if (buf.m < 0) buf.m = row.getLong(2)
     }
     buf

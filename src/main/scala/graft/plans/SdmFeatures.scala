@@ -175,7 +175,8 @@ object SdmFeatures {
   * "Not yet optimized" list), without materializing a per-group
   * struct-array column or running O(m) interpreted filters per pair
   * index per candidate. Null inputs are skipped (call sites never
-  * produce them — join output of non-null frames).
+  * produce them — join output of non-null frames); a null ELEMENT of
+  * `positions` fails loudly ([[PhraseTf.positionsOf]]).
   *
   * The one deliberate widening: pair counts accumulate in Long where
   * the old expression accumulated tfu in INT (`lit(0)` acc) — equal on
@@ -218,6 +219,12 @@ case class SdmFeatures(j: Expression, contrib: Expression,
 
   override def nullable: Boolean = false
 
+  @transient private lazy val nullablePositions: Boolean =
+    positions.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    }
+
   override def createAggregationBuffer(): SdmFeaturesBuffer =
     new SdmFeaturesBuffer()
 
@@ -232,9 +239,8 @@ case class SdmFeatures(j: Expression, contrib: Expression,
     val row = inputProj(input)
     if (!row.isNullAt(0) && !row.isNullAt(1) && !row.isNullAt(2) &&
         !row.isNullAt(3)) {
-      // toIntArray copies out of the projection's reused buffer
       buf.append(row.getLong(0), row.getDouble(1),
-        row.getArray(2).toIntArray)
+        PhraseTf.positionsOf(row.getArray(2), nullablePositions, prettyName))
       if (buf.m < 0) buf.m = row.getLong(3)
     }
     buf

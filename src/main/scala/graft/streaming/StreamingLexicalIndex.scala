@@ -569,7 +569,24 @@ object StreamingLexicalIndex {
   // arrival-sized sat appends, old-df ⊕ delta-count merges, pinned
   // versions — is unchanged; sat doubles are bit-identical to the
   // flat fold (LexicalSpec flat-vs-packed pins + the
-  // StreamingLexicalIndexSpec served ≡ flat-rebuild differential).
+  // StreamingLexicalIndexSpec served ≡ flat-rebuild differential, both
+  // against the test-tree flat reference). A store written in the flat
+  // layout is refused ([[requirePackedF]]), never misread.
+
+  /** Fails unless `post` (a read of the maintained BM25F postings
+    * store) holds the packed layout — or nothing yet. A store written
+    * in the flat one-row-per-(field, term, doc) layout would be
+    * misread: packed batches would append to a flat table, and
+    * [[Lexical.docFreqPacked]] would count its per-field rows as df.
+    */
+  private def requirePackedF(post: DataFrame): Unit = {
+    val cols = post.columns.toSet
+    if (cols.nonEmpty && !Set("dls", "entries").subsetOf(cols))
+      throw new IllegalStateException(
+        s"BM25F postings store has columns ${post.columns.mkString(", ")}" +
+          " — not the packed layout (term, doc_id, dls, entries); " +
+          "rebuild it with bootstrapF")
+  }
 
   private def statsPartialF(batch: DataFrame, fields: Seq[Lexical.FieldSpec],
                             tag: String): DataFrame =
@@ -604,7 +621,8 @@ object StreamingLexicalIndex {
            fields: Seq[Lexical.FieldSpec], postTx: TxTable,
            statsTx: TxTable, checkpointDir: String,
            schema: StructType, idCol: String = "doc_id",
-           maxFilesPerTrigger: Int = 1000): StreamingQuery =
+           maxFilesPerTrigger: Int = 1000): StreamingQuery = {
+    requirePackedF(postTx.read())
     spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
       .parquet(docsDir)
@@ -629,6 +647,7 @@ object StreamingLexicalIndex {
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
+  }
 
   /** Exact per-field rollup: Seq over field index of (n_docs, sum_dl,
     * avgdl).
@@ -676,7 +695,8 @@ object StreamingLexicalIndex {
     val st = statsF(statsTx, fields.length)
     val postV = postTx.latestVersion()
     val post = postTx.read(Some(postV))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    requirePackedF(post)
+    post.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val satV = satTx.overwrite(
       Lexical.bm25fSatFromPackedPostings(post, st.map(_._3), fields, k1)
         .sort("term"))
@@ -703,6 +723,7 @@ object StreamingLexicalIndex {
                        nThresholdPermille: Long = 100,
                        avgdlBandPermille: Long = 100,
                        k1: Double = 1.2): FactoredRefresh = {
+    requirePackedF(postTx.read())
     val cur = gens.current().getOrElse(throw new IllegalStateException(
       "refreshFactoredF before any factored generation — " +
         "buildFactoredGenerationF first"))

@@ -2371,11 +2371,11 @@ object ScaleBench {
     // hash-drawn; avg 3) and body is the remainder (~27–56), so the
     // per-field avgdl normalization actually decides scores (a short
     // title hit saturates far faster than the same tf in the body).
-    // Recorded per scale: the field-fold's input volume (multi-field
-    // postings rows — the one candidate-volume shuffle) and both
-    // fields' avgdl; the decade claim is fold input ×10 with the wall
-    // following it (shuffle COUNT is fixed by the plan, so linear
-    // volume growth is the whole story).
+    // Recorded per scale: the field-fold's input volume (Σ packed
+    // `entries` — one per (field, term, doc)) and both fields' avgdl;
+    // the decade claim is fold input ×10 with the wall following it
+    // (shuffle COUNT is fixed by the plan, so linear volume growth is
+    // the whole story).
     val bm25fSkewJson = sys.env.get("GRAFT_SCALE_BM25FSKEW").map { sN =>
       import graft.functions.TextFunctions
       import graft.operators.Lexical
@@ -2409,10 +2409,12 @@ object ScaleBench {
       val rows = Lexical.bm25fTopK(fd, fields, "doc_id",
         qs, "qtext", "q_id", k = k).count()
       val wallS = (System.nanoTime() - t0) / 1e9
-      // fold input volume + the skew itself, off one postings build
-      val pf = Lexical.postingsFields(fd, fields, "doc_id").persist()
-      val foldRows = pf.count()
-      val avg = Lexical.fieldStatsFromPostings(pf)
+      // fold input volume (one (field, term, doc) entry per field a
+      // term occurs in) + the skew itself, off one packed build
+      val pf = Lexical.postingsFieldsPacked(fd, fields, "doc_id").persist()
+      val foldRows = pf.agg(sum(size(col("entries")).cast("long")))
+        .head().getLong(0)
+      val avg = Lexical.fieldStatsFromPacked(pf)
         .orderBy("field").collect()
       pf.unpersist()
       qs.unpersist()

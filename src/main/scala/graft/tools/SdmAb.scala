@@ -148,21 +148,6 @@ object SdmAb {
         qs, "qtext", "q_id", k = 10))
       timeCount(s"SDMRR[$r]", Lexical.sdmTopKFromPostings(post,
         qs, "qtext", "q_id", k = 10, rerank = Some(n)))
-      // BM25 fold-key A/B on the SAME candidate frame: string term key
-      // (the pre-round-18 shape) vs the per-query term-rank surrogate
-      val candU = cand.withColumn("contrib",
-        col("idf_t") * satC(col("tf"), col("dl"), col("avgdl")))
-      def rank5(scored: org.apache.spark.sql.DataFrame) = scored
-        .withColumn("score", round(col("s"), 6))
-        .groupBy("q_id")
-        .agg(graft.operators.TopK.topKNative(10, negate(col("score")),
-          col("doc_id")).as("top"))
-      timeCount(s"UNISTR[$r]", rank5(candU.groupBy("q_id", "doc_id")
-        .agg(graft.operators.TopK.orderedFoldSum(col("term"),
-          col("contrib")).as("s"))))
-      timeCount(s"UNILONG[$r]", rank5(candU.groupBy("q_id", "doc_id")
-        .agg(graft.operators.TopK.orderedFoldSumLong(col("j"),
-          col("contrib")).as("s"))))
     }
     // row-identity checksum: same groups, same s_t bits, same pairs
     def sig(df: org.apache.spark.sql.DataFrame) = df

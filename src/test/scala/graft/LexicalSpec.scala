@@ -177,10 +177,11 @@ class LexicalSpec extends SparkSpec {
       s"title match must rank first: ${r.toSeq}")
     assert(r(0)._3 > r(1)._3)
 
-    val postF = Lexical.postingsFields(fieldDocs, fields, "doc_id")
+    val postF = FlatBm25fReference.postingsFields(fieldDocs, fields,
+      "doc_id")
     val stored = Lexical.bm25TopKFromFactoredStore(
         Lexical.bm25fSatStore(fieldDocs, fields, "doc_id"),
-        Lexical.docFreqAnyField(postF), 3L,
+        FlatBm25fReference.docFreqAnyField(postF), 3L,
         Seq((7L, "apple cherry")).toDF("q_id", "qtext"),
         "qtext", "q_id", k = 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(_._4).toSeq
@@ -454,39 +455,116 @@ class LexicalSpec extends SparkSpec {
        "non-contiguous candidate plan (round 18): a shuffled postings " +
        "frame yields the exchange-fold result, not a require-failure") {
     val qs = Seq((7L, "apple cherry"), (8L, "banana")).toDF("q_id", "qtext")
-    // a REPARTITIONED store scatters a doc's postings across
-    // partitions — the exact hazard the revisit guard would crash on;
-    // the plan-shape precondition must veto the local fold instead
+    // the one-shot builders fold scan-locally because they build their
+    // own postings in-plan, so a SHUFFLED input reaches the fold
+    // doc-contiguous; a
+    // REPARTITIONED store (a doc's postings scattered across
+    // partitions — the hazard the revisit guard would crash on) is
+    // served through the exchange fold. Same rows either way.
+    val shuffledDocs = docs.repartition(4, col("text"))
     val post = Lexical.postings(docs, "text", "doc_id")
       .repartition(4, col("term"))
     val dfreq = Lexical.docFreq(post)
     val stats = Lexical.corpusStatsFromPostings(post)
-    val viaLocalRequest = Lexical.bm25TopKFromStoreImpl(post, dfreq,
-        stats, qs, "qtext", "q_id", k = 5, k1 = 1.2, b = 0.75,
-        localFold = true)
+    val viaLocalRequest = Lexical.bm25TopK(shuffledDocs, "text", "doc_id",
+        qs, "qtext", "q_id", k = 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
       .toSeq
-    val viaExchange = Lexical.bm25TopKFromStoreImpl(post, dfreq,
-        stats, qs, "qtext", "q_id", k = 5, k1 = 1.2, b = 0.75,
-        localFold = false)
+    val viaExchange = Lexical.bm25TopKFromStore(post, dfreq,
+        stats, qs, "qtext", "q_id", k = 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
       .toSeq
     assert(viaLocalRequest == viaExchange)
     assert(viaLocalRequest.nonEmpty)
-    // the phrase twin: scan-local requested on a shuffled positional
-    // store must also degrade to the exchange fold, result-identical
+    // the phrase twin: the one-shot phrase fold over a shuffled input
+    // and the exchange fold over a shuffled positional store agree
     val posPost = Lexical.postingsPositional(docs, "text", "doc_id")
       .repartition(4, col("term"))
     val phq = Seq((9L, "apple cherry")).toDF("q_id", "qtext")
-    val phLocal = Lexical.phraseTopKImpl(posPost, phq, "qtext", "q_id",
-        k = 5, k1 = 1.2, b = 0.75, statsOverride = None,
-        scanLocalFold = true)
+    val phLocal = Lexical.phraseTopK(shuffledDocs, "text", "doc_id",
+        phq, "qtext", "q_id", k = 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(_._4).toSeq
-    val phExchange = Lexical.phraseTopKImpl(posPost, phq, "qtext", "q_id",
-        k = 5, k1 = 1.2, b = 0.75, statsOverride = None,
-        scanLocalFold = false)
+    val phExchange = Lexical.phraseTopKFromPostings(posPost, phq,
+        "qtext", "q_id", k = 5)
       .as[(Long, Long, Double, Int)].collect().sortBy(_._4).toSeq
     assert(phLocal == phExchange)
+  }
+
+  test("one-shot builders over any input layout ≡ the store path, " +
+       "bit for bit, with no (q_id, doc_id) exchange") {
+    // fixed-seed corpus: 240 docs over a 24-word vocabulary (skewed
+    // lengths, repeated terms, adjacent pairs the phrases can hit)
+    val rnd = new scala.util.Random(20261018L)
+    val vocab = (0 until 24).map(i => s"w$i")
+    val base = (0 until 240).map { i =>
+      val n = 1 + rnd.nextInt(14)
+      (i.toLong, Seq.fill(n)(vocab(rnd.nextInt(rnd.nextInt(24) + 1)))
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+    val qs = Seq((1L, "w0 w3"), (2L, "w1"), (3L, "w2 w5 w7"),
+      (4L, "w0 w1"), (5L, "w17 w2")).toDF("q_id", "qtext")
+    val fieldsL = Seq(Lexical.FieldSpec("title", 2.0, 0.75),
+      Lexical.FieldSpec("body", 1.0, 0.5))
+    def fieldify(d: org.apache.spark.sql.DataFrame) = d.select(
+      col("doc_id"),
+      concat_ws(" ", slice(split(trim(col("text")), "\\s+"), 1, 2))
+        .as("title"),
+      col("text").as("body"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.as[(Long, Long, Double, Int)].collect()
+        .map(r => (r._1, r._4, r._2,
+          java.lang.Double.doubleToRawLongBits(r._3)))
+        .sorted.toSeq
+    def foldExchanges(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+      df.count() // finalize AQE
+      graft.tools.PlanIntrospect.nodes(df.queryExecution.executedPlan)
+        .collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+            e.outputPartitioning.toString
+        }
+        .filter(p => p.contains("q_id") && p.contains("doc_id"))
+    }
+    // the store paths over the plain corpus
+    val post = Lexical.postings(base, "text", "doc_id")
+    val wantBm25 = rows(Lexical.bm25TopKFromStore(post, Lexical.docFreq(post),
+      Lexical.corpusStatsFromPostings(post), qs, "qtext", "q_id", k = 7))
+    val packed = Lexical.postingsFieldsPacked(fieldify(base), fieldsL,
+      "doc_id")
+    val wantBm25f = rows(Lexical.bm25TopKFromFactoredStore(
+      Lexical.bm25fSatStore(fieldify(base), fieldsL, "doc_id"),
+      Lexical.docFreqPacked(packed), 240L, qs, "qtext", "q_id", k = 7))
+    val wantPhrase = rows(Lexical.phraseTopKFromPostings(
+      Lexical.postingsPositional(base, "text", "doc_id"), qs,
+      "qtext", "q_id", k = 7))
+    assert(wantBm25.nonEmpty && wantBm25f.nonEmpty && wantPhrase.nonEmpty)
+    val key = pmod(xxhash64(lit(7L), col("doc_id")), lit(5L))
+    val layouts = Seq(
+      "repartitioned by a random key" ->
+        base.repartition(1 + rnd.nextInt(6), key),
+      "repartitioned round-robin" -> base.repartition(1 + rnd.nextInt(6)),
+      "persisted" -> base.repartition(3, key)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      "cached" -> base.repartition(4, col("text")).cache(),
+      "sorted within partitions" -> base.repartition(3)
+        .sortWithinPartitions(col("text").desc),
+      "globally sorted" -> base.orderBy(col("text")),
+      "a union of splits" -> base.filter(col("doc_id") % 3 === 0)
+        .unionByName(base.filter(col("doc_id") % 3 =!= 0).repartition(2)))
+    layouts.foreach { case (name, d) =>
+      val bm25 = Lexical.bm25TopK(d, "text", "doc_id", qs, "qtext", "q_id",
+        k = 7)
+      assert(rows(bm25) == wantBm25, s"bm25TopK over $name")
+      assert(foldExchanges(bm25).isEmpty, s"bm25TopK over $name")
+      val bm25f = Lexical.bm25fTopK(fieldify(d), fieldsL, "doc_id",
+        qs, "qtext", "q_id", k = 7)
+      assert(rows(bm25f) == wantBm25f, s"bm25fTopK over $name")
+      assert(foldExchanges(bm25f).isEmpty, s"bm25fTopK over $name")
+      val phrase = Lexical.phraseTopK(d, "text", "doc_id", qs, "qtext",
+        "q_id", k = 7)
+      assert(rows(phrase) == wantPhrase, s"phraseTopK over $name")
+      assert(foldExchanges(phrase).isEmpty, s"phraseTopK over $name")
+      d.unpersist()
+    }
   }
 
   test("packed multi-field postings (round 17): df/stats/sat " +
@@ -494,17 +572,18 @@ class LexicalSpec extends SparkSpec {
        "plans NO (term, doc)-keyed exchange — the field fold is " +
        "scan-local") {
     val packed = Lexical.postingsFieldsPacked(fieldDocs, fields, "doc_id")
-    val flat = Lexical.postingsFields(fieldDocs, fields, "doc_id")
+    val flat = FlatBm25fReference.postingsFields(fieldDocs, fields,
+      "doc_id")
     // any-field document frequency — identical pairs
     val dfP = Lexical.docFreqPacked(packed)
       .as[(String, Long)].collect().sortBy(_._1).toSeq
-    val dfF = Lexical.docFreqAnyField(flat)
+    val dfF = FlatBm25fReference.docFreqAnyField(flat)
       .as[(String, Long)].collect().sortBy(_._1).toSeq
     assert(dfP == dfF)
     // per-field stats — identical exact integers and divisions
     val stP = Lexical.fieldStatsFromPacked(packed)
       .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
-    val stF = Lexical.fieldStatsFromPostings(flat)
+    val stF = FlatBm25fReference.fieldStatsFromPostings(flat)
       .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
     assert(stP == stF)
     // sat: the packed SCAN-LOCAL fold vs the flat exchange fold over
@@ -512,7 +591,7 @@ class LexicalSpec extends SparkSpec {
     // order, so equality is exact (==), not approximate
     val avgdls = stF.sortBy(_._1).map(_._3)
     val satP = Lexical.bm25fSatStore(fieldDocs, fields, "doc_id")
-    val satF = Lexical.bm25fSatFromPostings(flat, avgdls, fields)
+    val satF = FlatBm25fReference.bm25fSatFromPostings(flat, avgdls, fields)
     val rowsP = satP.as[(String, Long, Double)].collect()
       .sortBy(r => (r._1, r._2)).toSeq
     val rowsF = satF.as[(String, Long, Double)].collect()

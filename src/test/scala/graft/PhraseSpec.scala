@@ -162,4 +162,24 @@ class PhraseSpec extends SparkSpec {
       assert(oneShot.nonEmpty)
     } finally { post.unpersist(); () }
   }
+
+  test("phrase_tf fails loudly on a null position, not as position 0") {
+    graft.plans.GraftExtensions.register(spark)
+    def tf(rows: Seq[(Long, Long, Seq[Option[Int]], Long)]) =
+      rows.toDF("g", "j", "positions", "m").groupBy("g")
+        .agg(graft.operators.TopK.phraseTf(col("j"), col("positions"),
+          col("m")).as("tf"))
+        .as[(Long, Long)].collect().toSeq
+    // positions typed nullable but null-free — the shape of a
+    // maintained store read back from parquet — count as before
+    assert(tf(Seq((1L, 1L, Seq(Some(1), Some(4)), 2L),
+      (1L, 2L, Seq(Some(2)), 2L))) == Seq((1L, 1L)))
+    // a null element must not stand in for position 0
+    val e = intercept[Exception](tf(Seq(
+      (1L, 1L, Seq(Some(1), Some(4)), 2L),
+      (1L, 2L, Seq(Some(2), None), 2L))))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("phrase_tf: null element")), msgs)
+  }
 }

@@ -240,4 +240,26 @@ class SdmSpec extends SparkSpec {
       assert(refFold.nonEmpty)
     } finally { post.unpersist(); () }
   }
+
+  test("sdm_features fails loudly on a null position, not as position 0") {
+    import org.apache.spark.sql.functions._
+    graft.plans.GraftExtensions.register(spark)
+    def feats(rows: Seq[(Long, Long, Double, Seq[Option[Int]], Long)]) =
+      rows.toDF("g", "j", "c", "positions", "m").groupBy("g")
+        .agg(graft.operators.TopK.sdmFeatures(col("j"), col("c"),
+          col("positions"), col("m"), 8).as("f"))
+        .select(col("f.s_t"), col("f.pairs")(0)("tfo"))
+        .as[(Double, Long)].collect().toSeq
+    // positions typed nullable but null-free — the shape of a
+    // maintained store read back from parquet — score as before
+    assert(feats(Seq((1L, 1L, 0.5, Seq(Some(1), Some(4)), 2L),
+      (1L, 2L, 0.25, Seq(Some(2)), 2L))) == Seq((0.75, 1L)))
+    // a null element must not stand in for position 0
+    val e = intercept[Exception](feats(Seq(
+      (1L, 1L, 0.5, Seq(Some(1), Some(4)), 2L),
+      (1L, 2L, 0.25, Seq(Some(2), None), 2L))))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("sdm_features: null element")), msgs)
+  }
 }

@@ -324,10 +324,11 @@ class StreamingLexicalIndexSpec extends SparkSpec {
         .agg(sum(col("dl")), count(lit(1))).head()
       r0.getLong(0).toDouble / r0.getLong(1).toDouble
     }
-    val unionPost = Lexical.postingsFields(union, fields, "doc_id")
+    val unionPost = FlatBm25fReference.postingsFields(union, fields,
+      "doc_id")
     val full = Lexical.bm25TopKFromFactoredStore(
-        Lexical.bm25fSatFromPostings(unionPost, avgdl0, fields),
-        Lexical.docFreqAnyField(unionPost), nDocs = 60L,
+        FlatBm25fReference.bm25fSatFromPostings(unionPost, avgdl0, fields),
+        FlatBm25fReference.docFreqAnyField(unionPost), nDocs = 60L,
         qs, "qtext", "q_id", k = 3)
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(served == full)
@@ -350,6 +351,46 @@ class StreamingLexicalIndexSpec extends SparkSpec {
       tag = "flexf-long-stats")
     val r2 = Idx.refreshFactoredF(gens, postTx, statsTx, satTx, fields)
     assert(r2 == Idx.FactoredFull(2L), s"expected full re-bake: $r2")
+  }
+
+  test("BM25F loop refuses a flat-layout postings store with a " +
+       "rebuild-with-bootstrapF message") {
+    val fields = Seq(Lexical.FieldSpec("title", 2.0, 0.75),
+      Lexical.FieldSpec("body", 1.0, 0.75))
+    val base = corpus(20).select(col("doc_id"),
+      concat_ws(" ", slice(split(trim(col("text")), "\\s+"), 1, 2))
+        .as("title"),
+      col("text").as("body"))
+    val root = tmp("graft-flexf-flat")
+    val postTx = new TxTable(spark, s"$root/post")
+    val statsTx = new TxTable(spark, s"$root/stats")
+    val satTx = new TxTable(spark, s"$root/sat")
+    val gens = new AnnGenerations(spark, s"$root/fgens")
+    // a store bootstrapped in the retired flat layout, with valid stats
+    postTx.appendOnce(
+      FlatBm25fReference.postingsFields(base, fields, "doc_id").sort("term"),
+      tag = "flexf-baseline")
+    statsTx.appendOnce(
+      fields.zipWithIndex.map { case (f, i) =>
+        base.select(lit(i).as("field"),
+          size(split(trim(col(f.textCol)), "\\s+")).cast("long").as("dl"))
+      }.reduce(_ unionByName _)
+        .groupBy("field")
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .withColumn("src_tag", lit("flexf-baseline")),
+      tag = "flexf-stats-baseline")
+    def refused(f: => Any): Unit = {
+      val e = intercept[IllegalStateException](f)
+      assert(e.getMessage.contains("bootstrapF"), e.getMessage)
+      assert(e.getMessage.contains("packed"), e.getMessage)
+    }
+    refused(Idx.buildFactoredGenerationF(gens, postTx, statsTx, satTx,
+      fields))
+    refused(Idx.refreshFactoredF(gens, postTx, statsTx, satTx, fields))
+    refused(Idx.runF(spark, s"$root/docs", fields, postTx, statsTx,
+      s"$root/ckpt", base.schema))
+    assert(gens.current().isEmpty, "nothing was published")
+    assert(satTx.latestVersion() == -1L, "no sat rows were written")
   }
 
   test("factored loop: a compacted postings range refuses the file-level " +
