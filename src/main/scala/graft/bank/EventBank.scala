@@ -63,8 +63,19 @@ class EventBank(spark: SparkSession, root: String,
       spark.sparkContext.hadoopConfiguration)
       .exists(new org.apache.hadoop.fs.Path(indexPath))
 
-  private def rawIndexDf: DataFrame =
-    if (txIndex) txTable.read() else spark.read.parquet(indexPath)
+  private val indexSchema = new SchemaMemo(spark)
+
+  /** The index as stored. A plain-parquet read infers the schema (a
+    * footer-reading Spark job) once per store version and then reads
+    * with `.schema(...)` ([[SchemaMemo]]): the version is
+    * [[indexFingerprint]], a driver-side listing probe (name, mtime,
+    * length per file), so any write that changes the index dir's files
+    * — a bank write or an external one — re-infers. Tx banks read
+    * through their log.
+    */
+  private[graft] def rawIndexDf: DataFrame =
+    if (txIndex) txTable.read()
+    else indexSchema.read(indexFingerprint(), indexPath)
 
   /** Cluster index rows by time so parquet row-group min/max stats
     * prune min/max-time queries (the most selective kwargs at archive

@@ -1,6 +1,6 @@
 package graft.bank
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 
 /** Small-file helpers shared by the bank sidecars: read a marker file
   * whole, and publish one atomically (hidden tmp + the one Hadoop
@@ -9,10 +9,19 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   */
 private[bank] object FsUtil {
 
+  /** Reads through a checksummed filesystem's raw side: a publish
+    * renames the data file and its `.crc` file one after the other, so
+    * a checked read racing it can pair new data with the old checksum
+    * and fail. The data file itself is swapped in one rename.
+    */
   def readSmallFile(fs: FileSystem, p: Path): Option[String] = {
-    if (!fs.exists(p)) None
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    if (!raw.exists(p)) None
     else {
-      val in = fs.open(p)
+      val in = raw.open(p)
       try {
         val out = new java.io.ByteArrayOutputStream()
         val buf = new Array[Byte](4096)

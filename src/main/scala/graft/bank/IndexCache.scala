@@ -1,6 +1,7 @@
 package graft.bank
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
 /** Containment cache for index reads — the reference's `_IndexCache`
@@ -74,4 +75,28 @@ final class IndexCache(size: Int = 5) {
 
   /** Cached-entry count (spec introspection). */
   def occupied: Int = synchronized(entries.count(_.isDefined))
+}
+
+/** The schema of a plain-parquet index, inferred once per store
+  * version: `spark.read.parquet` runs a footer-reading Spark job to
+  * infer it on every read, so reads of an unchanged store pass the
+  * remembered schema instead. `version` is the caller's driver-side
+  * store-version probe (the same kind of stamp [[IndexCache]] guards
+  * its entries with); a write the probe does not see leaves readers on
+  * the schema last inferred.
+  */
+final class SchemaMemo(spark: SparkSession) {
+  private val last =
+    new java.util.concurrent.atomic.AtomicReference[(Any, StructType)]()
+
+  def read(version: Any, path: String): DataFrame = last.get match {
+    case (`version`, schema) => spark.read.schema(schema).parquet(path)
+    case _ =>
+      val df = spark.read.parquet(path)
+      last.set((version, df.schema))
+      df
+  }
+
+  /** Forget the schema: the next read infers from the files. */
+  def clear(): Unit = last.set(null)
 }

@@ -89,39 +89,13 @@ class WaveBank(spark: SparkSession, root: String,
   private val stampFile =
     new org.apache.hadoop.fs.Path(s"$root/index.stamp")
 
-  private def readSmallFile(p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = hadoopFs
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](4096)
-        var n = in.read(buf)
-        while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(out.toByteArray,
-          java.nio.charset.StandardCharsets.UTF_8).trim)
-      } finally in.close()
-    }
-  }
+  private def readSmallFile(p: org.apache.hadoop.fs.Path): Option[String] =
+    FsUtil.readSmallFile(hadoopFs, p)
 
-  /** Atomic small-file publish: write a hidden tmp then rename OVER the
-    * destination via `FileContext` (Hadoop's only rename that overwrites
-    * atomically) — a reader sees either the old or the new content,
-    * never a missing or truncated file.
-    */
   private def atomicWriteSmall(dst: org.apache.hadoop.fs.Path,
-                               content: String): Unit = {
-    val fs = hadoopFs
-    val tmp = new org.apache.hadoop.fs.Path(dst.getParent,
-      s".${dst.getName}.tmp")
-    val os = fs.create(tmp, true)
-    try os.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+                               content: String): Unit =
+    FsUtil.atomicWriteSmall(hadoopFs, spark.sparkContext.hadoopConfiguration,
+      dst, content)
 
   private def bumpStamp(): Unit = {
     val c = readSmallFile(stampFile)
@@ -145,8 +119,24 @@ class WaveBank(spark: SparkSession, root: String,
     if (txIndex) txTable.latestVersion() >= 0
     else hadoopFs.exists(new org.apache.hadoop.fs.Path(liveIndexPath))
 
+  private val indexSchema = new SchemaMemo(spark)
+
+  /** The index as stored. A plain-parquet read infers the schema (a
+    * footer-reading Spark job) once per store version and then reads
+    * with `.schema(...)` ([[SchemaMemo]]): the version is
+    * [[indexStamp]], the driver-side probe that also guards
+    * [[indexCache]], under the same trust model. Every bank-API write
+    * bumps the stamp, so the next read re-infers; a store also written
+    * by external tools must delete the stamp file (the listing
+    * fingerprint then keys the schema) or its readers keep the schema
+    * last inferred. Tx banks read through their log.
+    */
   private[graft] def indexDf: DataFrame =
-    if (txIndex) txTable.read() else spark.read.parquet(liveIndexPath)
+    if (txIndex) txTable.read()
+    else {
+      val path = liveIndexPath
+      indexSchema.read((indexStamp(), path), path)
+    }
 
   /** Publish `df` as a new index generation: write to a fresh
     * `index.g<N>` dir (invisible to readers until the pointer moves),
@@ -576,10 +566,16 @@ class WaveBank(spark: SparkSession, root: String,
     */
   def enforceVersion(): Unit = {
     if (!indexExists) return // fresh bank: nothing to enforce
+    // the version check reads the files' own schema, never one
+    // remembered under the stamp (an external rewrite may not bump it)
+    indexSchema.clear()
     val stale = try {
       val idx = indexDf
+      // rows of files written without the column read null: stale too
+      // (the schema may come from a newer file of a mixed store)
       !idx.columns.contains("index_version") ||
-        idx.agg(min("index_version")).collect()(0).getInt(0) < indexVersion
+        idx.agg(min(coalesce(col("index_version"), lit(0))))
+          .collect()(0).getInt(0) < indexVersion
     } catch { case _: Throwable => false }
     if (stale) {
       val fs = hadoopFs
@@ -591,6 +587,9 @@ class WaveBank(spark: SparkSession, root: String,
           .foreach(n =>
             fs.delete(new org.apache.hadoop.fs.Path(s"$root/$n"), true))
         fs.delete(ptrFile, false)
+        // a reader between the rebuild's write and its stamp bump must
+        // not take the new files for the old store version
+        bumpStamp()
       } else fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
       updateIndex()
     }
@@ -623,151 +622,160 @@ class WaveBank(spark: SparkSession, root: String,
       spark.read.parquet(segmentsPath)
         .withColumn("path", col("_metadata.file_path"))
 
-  /** Driver-side (path → mtime ms) listing of segment files newer than
-    * the watermark — the V2 formats push the watermark into file
-    * listing but don't surface mtime as a column, and the index needs
-    * it for modified-file detection. Lists through the scan's own
-    * listing with the same −1 ms slack, so the map covers every file
-    * the scan returns; incremental-batch-sized by the watermark
-    * contract.
+  /** Shortest segment file the store's scan lists (the record codec's
+    * one-record minimum; parquet lists every file).
     */
-  private def freshFileMtimes(lastIndexedNs: Long): DataFrame = {
-    import spark.implicits._
-    val cut = lastIndexedNs / 1000000L - 1
-    graft.sources.SegmentSource.listFiles(segmentsPath, 0, Some(cut), None)
-      .map(st => (st.getPath.toString, st.getModificationTime))
-      .toDF("path", "mtime_ms")
+  private def minFileLen: Int = segmentFormat match {
+    case "mseed" => graft.sources.MiniSeedCodec.minFileLen
+    case "gsg" => graft.sources.GsgCodec.minFileLen
+    case _ => 0
   }
 
-  /** (Re)build the summary index from segment files newer than the last
-    * index pass; first call indexes everything. A file MODIFIED in
-    * place (same path, newer mtime — an externally managed mseed/gsg
-    * dir an acquisition tool appends to) REPLACES its index rows: the
-    * reference's mtime contract re-indexes modified files
-    * (`bank/core.py:193-210`). Bank-written parquet segments are
-    * immutable, so that path costs nothing in the common case — see
-    * the dedup note below for the plan shapes.
+  /** Driver-side walk of the segment files modified after `afterMs`
+    * (every file when None): path → mtime ms, the path in the form the
+    * index stores it — the record scan's `path` (`Path.toString`) or
+    * parquet's `_metadata.file_path`, the URI-escaped form of a path
+    * rebuilt from its string (`file:/a%20b`, where the listed path's
+    * own URI reads `file:///a%20b`). It lists through the record
+    * scan's own listing, so it sees exactly the files a scan would read.
     */
-  def updateIndex(): Unit = {
-    // existence check, not a catch-all: a transient read failure must
-    // propagate — treating it as "no index" would re-append the whole
-    // archive into the append-only index (permanent duplicates)
-    val lastIndexed: Long =
-      if (indexExists)
-        indexDf.agg(max("indexed_at")).collect()(0).getLong(0)
-      else Long.MinValue
+  private[graft] def walkSegments(afterMs: Option[Long]): Map[String, Long] =
+    graft.sources.SegmentSource.listFiles(segmentsPath, minFileLen, afterMs,
+        None)
+      .map { st =>
+        val p = st.getPath.toString
+        (if (v2Format) p
+         else new org.apache.hadoop.fs.Path(p).toUri.toString) ->
+          st.getModificationTime
+      }.toMap
 
+  /** Index rows of the segment files in `files` (path → mtime ms as the
+    * walk saw them), read from their headers alone (parquet sizes the
+    * samples array). The `path` filter names exactly these files to
+    * the scan — the record source prunes its listing with it, parquet
+    * its file list — so a file the walk did not see waits for the next
+    * pass.
+    */
+  private def indexRows(files: Map[String, Long], indexedAt: Long): DataFrame = {
+    val paths = files.keys.toSeq
     val segs =
       if (v2Format)
-        // header-only V2 scan (samples unprojected → payloads unread);
-        // the mtime watermark pushes into file listing, −1 ms slack as
-        // the reference. mtime arrives via a broadcast join against the
-        // driver-side fresh-file walk (a file landing between the walk
-        // and the scan's own listing gets −1 — never matching a stored
-        // mtime, it re-indexes as modified on this or the next pass
-        // rather than being silently dropped)
-        spark.read.format(segmentFormat)
-          .option("modifiedAfterMs", (lastIndexed / 1000000L - 1).toString)
-          .load(segmentsPath)
+        spark.read.format(segmentFormat).load(segmentsPath)
+          .filter(col("path").isin(paths: _*))
           .select(col("network"), col("station"), col("location"),
             col("channel"), col("starttime"), col("sampling_period"),
             col("n_samples").as("n"), col("path"))
-          .join(broadcast(freshFileMtimes(lastIndexed)), Seq("path"), "left")
-          .withColumn("mtime_ms", coalesce(col("mtime_ms"), lit(-1L)))
       else spark.read.parquet(segmentsPath)
-        .select(col("network"), col("station"), col("location"), col("channel"),
-          col("starttime"), col("sampling_period"), size(col("samples")).as("n"),
-          col("_metadata.file_path").as("path"),
-          unix_millis(col("_metadata.file_modification_time")).as("mtime_ms"))
-        .filter(col("mtime_ms") > lit(lastIndexed / 1000000L) - 1) // −1 ms slack, as the reference
-    val newIndex = segs.select(
+        .filter(col("_metadata.file_path").isin(paths: _*))
+        .select(col("network"), col("station"), col("location"),
+          col("channel"), col("starttime"), col("sampling_period"),
+          size(col("samples")).as("n"), col("_metadata.file_path").as("path"))
+    segs.select(
       Schemas.nslcNormalize(col("network")).as("network"),
       Schemas.nslcNormalize(col("station")).as("station"),
       Schemas.nslcNormalize(col("location")).as("location"),
       Schemas.nslcNormalize(col("channel")).as("channel"),
       col("starttime"),
       (col("starttime") + col("n").cast("long") * col("sampling_period")).as("endtime"),
-      col("sampling_period"), col("path"), col("mtime_ms"))
-      .withColumn("indexed_at", lit(System.currentTimeMillis() * 1000000L))
+      col("sampling_period"), col("path"),
+      element_at(typedLit(files), col("path")).as("mtime_ms"))
+      .withColumn("indexed_at", lit(indexedAt))
       .withColumn("index_version", lit(indexVersion))
-    // Index de-dup: the −1 ms slack (or ANY storage-clock skew putting a
-    // file's mtime ahead of the driver clock) can re-list an already-
-    // indexed file — drop candidates whose (path, mtime) the index
-    // already holds, making updateIndex idempotent instead of
-    // tolerate-duplicates-like-the-reference, while a path re-listed
-    // with a NEW mtime survives as a genuine modification. Plan shape:
-    // the candidate keys (the incremental batch — small by the
-    // watermark contract) BROADCAST into a semi join against the
-    // index's pruned key columns, whose result is candidate-bounded and
-    // broadcasts back into the anti join — the index is scanned once
-    // (two columns) and NEVER shuffled, the same cost class as the
-    // `max(indexed_at)` probe above.
-    if (lastIndexed == Long.MinValue) {
-      if (newIndex.limit(1).count() > 0) {
+  }
+
+  /** (Re)build the summary index from the segment files modified since
+    * the last index pass; the first call indexes everything. A file
+    * MODIFIED in place (same path, newer mtime — an externally managed
+    * mseed/gsg dir an acquisition tool appends to) REPLACES its index
+    * rows: the reference's mtime contract (`bank/core.py:193-210`).
+    *
+    * An incremental pass decides on the driver:
+    *   1. one job reads the watermark, `max(indexed_at)`;
+    *   2. `indexed_at` is taken, then one driver-side walk lists the
+    *      files modified after the watermark (−1 ms slack, as the
+    *      reference) — none: done;
+    *   3. one bounded index query collects the (path, `mtime_ms`) pairs
+    *      already indexed for the walked paths. A walked file whose pair
+    *      the index holds is known (the slack, or a storage clock ahead
+    *      of the driver's, re-lists it) — all known: done, no further
+    *      job;
+    *   4. only the fresh files' headers are read (a pushed `path`
+    *      filter). Fresh files whose path the index holds under another
+    *      mtime are replaced: the store is rewritten minus their old
+    *      rows (O(index), paid only when a file changed in place);
+    *      otherwise the rows are appended.
+    * An index older than the `mtime_ms` column (version < 2) dedups by
+    * path alone and keeps its legacy column set — appending a wider
+    * schema would leave the store's files disagreeing;
+    * [[enforceVersion]] is the designed upgrade.
+    *
+    * Watermark invariant: `indexed_at` is taken BEFORE the walk, so a
+    * file that lands (or is modified) after the walk has an mtime at or
+    * after this pass's `indexed_at` and is listed by the next pass,
+    * which indexes it once; the `path` filter keeps it out of this
+    * pass.
+    */
+  def updateIndex(): Unit = {
+    // existence check, not a catch-all: a transient read failure must
+    // propagate — treating it as "no index" would re-append the whole
+    // archive into the append-only index (permanent duplicates)
+    val exists = indexExists
+    val afterMs =
+      if (exists)
+        Some(indexDf.agg(max("indexed_at")).collect()(0).getLong(0) /
+          1000000L - 1)
+      else None
+    val indexedAt = System.currentTimeMillis() * 1000000L
+    val walked = walkSegments(afterMs)
+    if (walked.isEmpty) return
+    if (!exists) {
+      val rows = indexRows(walked, indexedAt)
+      if (rows.limit(1).count() > 0) {
         // fresh build: drop any sidecar left over from a deleted index
         // (enforceVersion, external cleanup) before the append re-stamps
         if (statsExists)
           hadoopFs.delete(
             new org.apache.hadoop.fs.Path(statsSketchPath), true)
-        indexAppend(newIndex)
+        indexAppend(rows)
         indexCache.foreach(_.clear())
       }
-    } else {
-      val idx = indexDf
-      if (!idx.columns.contains("mtime_ms")) {
-        // index written before the mtime column existed (version < 2):
-        // keep the legacy path-only dedup and the legacy column set —
-        // appending a wider schema into the old dir would leave the
-        // store's files disagreeing on schema; enforceVersion() is the
-        // designed upgrade (delete + rebuild at the current version)
-        val legacy = newIndex.drop("mtime_ms")
-        val seen = idx.select("path").join(
-          broadcast(legacy.select("path").distinct()), Seq("path"),
-          "left_semi")
-        val fresh = legacy.join(broadcast(seen), Seq("path"), "left_anti")
-          .select(legacy.columns.map(col): _*)
-        if (fresh.limit(1).count() > 0) {
-          indexAppend(fresh)
-          indexCache.foreach(_.clear())
-        }
-      } else {
-        val seen = idx.select("path", "mtime_ms").join(
-          broadcast(newIndex.select("path", "mtime_ms").distinct()),
-          Seq("path", "mtime_ms"), "left_semi")
-        val fresh = newIndex
-          .join(broadcast(seen), Seq("path", "mtime_ms"), "left_anti")
-          .select(newIndex.columns.map(col): _*) // join fronts the key; keep store order
-        if (fresh.limit(1).count() > 0) {
-          // candidate-bounded: paths being REPLACED (already indexed
-          // under an older mtime)
-          val replaced = idx.select("path").join(
-            broadcast(fresh.select("path").distinct()), Seq("path"),
-            "left_semi")
-          if (replaced.limit(1).count() == 0) indexAppend(fresh)
-          else {
-            // in-place modification detected: rewrite the store minus
-            // the superseded rows — O(index), paid only when a segment
-            // file actually changed. Tx banks rewrite through a commit
-            // (writeGeneration's pointer machinery is the PLAIN-parquet
-            // publish path; a tx store's readers resolve the log, so a
-            // generation swap there would be silently invisible);
-            // plain banks go through the atomic generation swap.
-            val kept = idx.join(broadcast(replaced.distinct()),
-              Seq("path"), "left_anti")
-            // the kept∪fresh plan runs twice (generation write +
-            // sidecar rebuild) by choice — see indexAppend's
-            // measured-2.8×-slower checkpoint note
-            val rewritten = kept.unionByName(fresh)
-              .sort("network", "station", "location", "channel",
-                "starttime")
-            if (txIndex) { txTable.overwrite(rewritten); () }
-            else writeGeneration(rewritten)
-            statsRebuild(rewritten)
-          }
-          indexCache.foreach(_.clear())
-        }
-      }
+      return
     }
+    val idx = indexDf
+    val legacy = !idx.columns.contains("mtime_ms")
+    // bounded by the walk (the incremental batch); each task dedups its
+    // rows (one per record, most repeating one file), the driver the rest
+    val known: Set[(String, Long)] = idx
+      .filter(col("path").isin(walked.keys.toSeq: _*))
+      .select(col("path"), if (legacy) lit(-1L) else col("mtime_ms"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .mapPartitions(_.toSet.iterator)(
+        Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+      .collect().toSet
+    val fresh = walked.filter { case (p, m) =>
+      !known((p, if (legacy) -1L else m)) }
+    if (fresh.isEmpty) return
+    val rows = indexRows(fresh, indexedAt)
+    val replaced = fresh.keySet & known.map(_._1)
+    if (replaced.isEmpty)
+      indexAppend(if (legacy) rows.drop("mtime_ms") else rows)
+    else {
+      // in-place modification: rewrite the store minus the superseded
+      // rows. Tx banks rewrite through a commit (writeGeneration's
+      // pointer machinery is the PLAIN-parquet publish path; a tx
+      // store's readers resolve the log, so a generation swap there
+      // would be silently invisible); plain banks go through the
+      // atomic generation swap. The kept∪fresh plan runs twice
+      // (generation write + sidecar rebuild) by choice — see
+      // indexAppend's measured-2.8×-slower checkpoint note.
+      val rewritten = idx.filter(!col("path").isin(replaced.toSeq: _*))
+        .unionByName(rows)
+        .sort("network", "station", "location", "channel", "starttime")
+      if (txIndex) { txTable.overwrite(rewritten); () }
+      else writeGeneration(rewritten)
+      statsRebuild(rewritten)
+    }
+    indexCache.foreach(_.clear())
   }
 
   /** The filtered index — glob NSLC + interval overlap with the ±1 s

@@ -60,7 +60,12 @@ object Lexical {
     val key = site + "@" +
       System.identityHashCode(p.sparkSession).toHexString
     val prev = lastPersisted.put(key, p)
-    if (prev != null && (prev ne p)) prev.unpersist(blocking = false)
+    // persisting a plan that is already cached is a no-op, so `prev`
+    // may hold the very cache entry `p` reads: unpersisting it would
+    // evict this call's own cache
+    if (prev != null && (prev ne p) &&
+        !prev.queryExecution.analyzed.sameResult(p.queryExecution.analyzed))
+      prev.unpersist(blocking = false)
     p
   }
 

@@ -418,6 +418,22 @@ class LexicalSpec extends SparkSpec {
         "rotation must release the previous postings")
   }
 
+  test("rotating persist keeps a same-plan cache: consecutive " +
+       "sdmTopKFromPostings calls over one postings frame leave the " +
+       "corpus stats cached") {
+    val post = Lexical.postingsPositional(docs, "text", "doc_id")
+    val qs = Seq((1L, "apple cherry")).toDF("q_id", "qtext")
+    val stats = Lexical.corpusStatsFromPostings(post)
+    val runs = (0 until 3).map { i =>
+      val got = Lexical.sdmTopKFromPostings(post, qs, "qtext", "q_id",
+        k = 3).collect().toSeq
+      assert(stats.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        s"call ${i + 1} left the corpus stats uncached")
+      got
+    }
+    assert(runs.distinct.size == 1)
+  }
+
   test("one-shot bm25TopK / bm25fTopK fold scan-locally (round 17): " +
        "no (q_id, doc_id)-keyed exchange anywhere in the executed " +
        "plan, results identical to the exchange-fold store path") {
