@@ -1,10 +1,13 @@
 package graft.bank
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.IsNotNull
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import graft.core.Schemas
-import graft.functions.Geo
-import graft.operators.MergeOps
+import graft.functions.{Geo, TextFunctions}
+import graft.operators.{MergeOps, Sketches}
 
 /** Event-catalog query surface — the EventBank pillar (obsplus
   * `bank/eventbank.py` + `events/get_events.py`): the exact kwarg
@@ -372,7 +375,13 @@ class EventBank(spark: SparkSession, root: String,
     * function of the resolved catalog's value set.
     */
   private def statsPartials(resolved: DataFrame): DataFrame = {
-    graft.plans.GraftExtensions.register(spark)
+    // quantile_sketch512(mag_milli) FILTER (WHERE mag_milli IS NOT NULL)
+    val magSketch = udaf(new Sketches.QuantileAgg(statsMagC), Encoders.scalaLong)
+      .withName(s"quantile_sketch$statsMagC")
+    val magSk = expression(magSketch(col("mag_milli"))) match {
+      case a: AggregateExpression =>
+        a.copy(filter = Some(IsNotNull(expression(col("mag_milli")))))
+    }
     resolved.select(
         floor(coalesce(col("time"), lit(Schemas.SmallDt64)) / lit(DayNs))
           .cast("long").as("day"),
@@ -380,12 +389,10 @@ class EventBank(spark: SparkSession, root: String,
         round(col("magnitude") * 1000).cast("long").as("mag_milli"))
       .groupBy("day")
       .agg(count(lit(1)).as("n_events"),
-        graft.operators.Sketches
-          .kmvSketch(expr("md5_long60(author)"), statsAuthorK)
+        Sketches.kmvSketch(TextFunctions.md5Long60(col("author")), statsAuthorK)
           .as("author_sk"),
-        expr("quantile_sketch512(mag_milli) FILTER (WHERE mag_milli IS NOT NULL)")
-          .as("mag_sk"),
-        graft.operators.Sketches.freqSketch(col("author"), statsAuthorK)
+        column(magSk).as("mag_sk"),
+        Sketches.freqSketch(col("author"), statsAuthorK)
           .as("author_top"))
   }
 

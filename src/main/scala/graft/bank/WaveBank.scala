@@ -3,7 +3,7 @@ package graft.bank
 import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core.Schemas
-import graft.functions.Fnmatch
+import graft.functions.{Fnmatch, TextFunctions}
 import graft.operators.{IntervalJoin, Intervals, TimeChunks, TraceStitch}
 
 /** Waveform archive — the WaveBank capability pillar (obsplus
@@ -384,7 +384,6 @@ class WaveBank(spark: SparkSession, root: String,
     */
   private def statsPartials(batch: DataFrame): DataFrame = {
     import graft.operators.Sketches
-    graft.plans.GraftExtensions.register(spark)
     batch.select(
         floor(col("starttime") / lit(DayNs)).cast("long").as("day"),
         concat_ws(".", col("network"), col("station"), col("location"),
@@ -394,7 +393,7 @@ class WaveBank(spark: SparkSession, root: String,
       .groupBy("day")
       .agg(count(lit(1)).as("n_segments"),
         sum(col("n_samples")).as("sum_samples"),
-        Sketches.kmvSketch(expr("md5_long60(seed_id)"), statsSeedK)
+        Sketches.kmvSketch(TextFunctions.md5Long60(col("seed_id")), statsSeedK)
           .as("seed_sk"),
         Sketches.quantileSketch(col("n_samples"), statsLenC).as("len_sk"),
         Sketches.freqSketch(col("seed_id"), statsSeedK).as("seed_top"))

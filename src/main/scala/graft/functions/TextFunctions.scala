@@ -2,6 +2,9 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+
+import graft.plans.{Md5Long60, SpanHashes}
 
 /** Text-analysis primitives for large-scale corpus pipelines: token
   * counting, quality scoring, language-ID heuristics, fingerprinting.
@@ -56,6 +59,19 @@ object TextFunctions {
     */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(trim(text)), "\\s+", " "))
+
+  /** The first 60 bits of md5(s) as a non-negative long
+    * ([[graft.plans.Md5Long60]], SQL `md5_long60`): bit-identical to
+    * `conv(substring(md5(s), 1, 15), 16, 10).cast("long")`.
+    */
+  def md5Long60(s: Column): Column = column(Md5Long60(expression(s)))
+
+  /** One `(start, h1, h2)` struct per full `width`-token window at
+    * `stride` ([[graft.plans.SpanHashes]], SQL `span_hashes`): h1 and
+    * h2 are `p` and `s` hex nibbles of the window's md5.
+    */
+  def spanHashes(toks: Column, width: Int, stride: Int, p: Int, s: Int): Column =
+    column(SpanHashes(expression(toks), width, stride, p, s))
 
   /** PII scrub patterns (C4/CCNet-style pre-training redaction).
     * Deliberately RE2-safe syntax (character classes + quantifiers, no

@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+
+import graft.plans.{ProbeBuckets, VecDot, VecL2}
 
 /** Embedding-vector primitives over `array<float>` columns, written as
   * higher-order Column expressions (`zip_with`/`aggregate`) so they run
@@ -21,17 +25,18 @@ object VectorFunctions {
 
   /** Bit-identical native form of [[dot]]: one fused primitive loop
     * (no intermediate products array), codegen'd via the custom
-    * `graft.plans.VecDot` expression. Requires the graft extensions
-    * (`GraftSession.configure` installs them); prefer it on pairwise
-    * hot loops at scale.
+    * `graft.plans.VecDot` expression; prefer it on pairwise hot loops
+    * at scale.
     */
-  def dotNative(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  def dotNative(a: Column, b: Column): Column =
+    column(VecDot(expression(a), expression(b)))
 
   /** Native squared-L2 distance (one fused primitive loop, codegen'd
     * via `graft.plans.VecL2`) — the `adcTable`/`probeCells` fold as a
     * Column, for distance-ranked serving plans.
     */
-  def l2Native(a: Column, b: Column): Column = call_function("vec_l2", a, b)
+  def l2Native(a: Column, b: Column): Column =
+    column(VecL2(expression(a), expression(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -86,7 +91,7 @@ object VectorFunctions {
     // to interpreted eval after ~96 logged attempts) and was
     // planning-bound at large nProbe. Value-identical (spec-pinned
     // differentially against probeBucketsColumnForm).
-    call_function("probe_buckets", a, lit(bits), lit(nProbe))
+    column(ProbeBuckets(expression(a), Literal(bits), Literal(nProbe)))
 
   /** The original composed-Column derivation, kept as the differential
     * reference for the native kernel (and the shape the q118 oracle

@@ -28,7 +28,6 @@ object Contamination {
   def contaminatedDocs(train: DataFrame, eval: DataFrame,
                        textCol: String, idCol: String,
                        width: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.register(train.sparkSession)
     def hashes(df: DataFrame) = df.select(col(idCol),
       explode(array_distinct(Dedup.tokenShingleHashes(
         TextFunctions.tokens(col(textCol)), width))).as("h"))
@@ -77,7 +76,6 @@ object Contamination {
                             textCol: String, idCol: String,
                             k: Int = 8, bands: Int = 4,
                             rowsPerBand: Int = 2): DataFrame = {
-    graft.plans.GraftExtensions.register(train.sparkSession)
     // lshBuckets' explode-first shape, keeping the signature attribute
     // on each banded row so the estimate needs no join back
     def banded(df: DataFrame) = df

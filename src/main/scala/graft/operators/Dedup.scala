@@ -1,9 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 import graft.functions.TextFunctions
+import graft.plans.{IntMinhash, ShingleHash60}
 
 /** Corpus deduplication operators for training-data pipelines, each
   * designed around one shuffle on a derived key so they scale linearly:
@@ -77,12 +80,10 @@ object Dedup {
     // materialized k transformed arrays per row. The null branch
     // mirrors the composed form exactly: a NULL base array yields an
     // array of k nulls (array() never returns null), not a null
-    // signature. Requires the graft extensions
-    // (GraftSession.configure installs; operators register
-    // defensively).
+    // signature.
     when(baseHashes.isNull,
       array((0 until k).map(_ => lit(null).cast("long")): _*))
-      .otherwise(call_function("int_minhash", baseHashes, lit(k)))
+      .otherwise(column(IntMinhash(expression(baseHashes), k)))
 
   /** The composed Column form of [[intMinhashSignature]] — the
     * spec-side reference the native expression is pinned against
@@ -100,10 +101,9 @@ object Dedup {
     * shingle-string materialization, no hex encode/parse, one
     * MessageDigest per thread. Bit-identical values, so the same
     * DuckDB oracle fragments apply; prefer it on the hot MinHash path.
-    * Requires the graft extensions (GraftSession.configure installs).
     */
   def tokenShingleHashes(toks: Column, width: Int = 3): Column =
-    call_function("shingle_hash60", toks, lit(width), lit(MinhashP))
+    column(ShingleHash60(expression(toks), Literal(width), Literal(MinhashP)))
 
   /** Oracle-side SQL fragments (DuckDB dialect) for the two steps. */
   def shingleHashesSql(shinglesExpr: String): String =
@@ -198,16 +198,12 @@ object Dedup {
     */
   def mdSimhash(df: DataFrame, textCol: String, idCol: String,
                 bits: Int = 60): DataFrame = {
-    // defensive registration (round 18, advisor item): this entry
-    // point rides the native md5_long60 — on a session not built via
-    // GraftSession the function would otherwise be undefined
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val tok = df.select(col(idCol),
         explode(TextFunctions.tokens(col(textCol))).as("t"))
       // native 60-bit md5 prefix (round 17): bit-identical to
       // conv(substring(md5(t), 1, 15), 16, 10) — Md5Long60's contract —
       // with no hex encode / radix parse per token
-      .withColumn("h", call_function("md5_long60", col("t")))
+      .withColumn("h", TextFunctions.md5Long60(col("t")))
     val sums = (0 until bits).map(j =>
       sum(when(shiftright(col("h"), j).bitwiseAND(lit(1L)) === 1L, 1)
         .otherwise(-1)).as(s"_b$j"))
@@ -465,7 +461,6 @@ object Dedup {
     */
   def duplicateSpans(docs: DataFrame, textCol: String, idCol: String,
                      width: Int, stride: Int, minDocs: Long): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     // fused span hashing (round 17, guide §1.2 per-task work): one
     // native expression per doc replaces the explode(sequence) →
     // slice → concat_ws → md5 → conv(substring) chain — bit-identical
@@ -480,8 +475,8 @@ object Dedup {
         // advisor item) skips 14 wasted nibble extractions per span
         // on the corpus-volume stride path; h1 is unaffected (disjoint
         // digest slices), so keys and oracle fragments are unchanged
-        explode(call_function("span_hashes", col("toks"),
-          lit(width), lit(stride), lit(15), lit(1))).as("sp"))
+        explode(TextFunctions.spanHashes(col("toks"), width, stride, 15, 1))
+          .as("sp"))
       .select(col(idCol), col("sp.h1").as("span_h"))
     spans.groupBy("span_h")
       .agg(countDistinct(col(idCol)).as("n_docs"),
@@ -534,7 +529,6 @@ object Dedup {
       primaryHexChars: Int, secondaryHexChars: Int): DataFrame = {
     require(primaryHexChars >= 1 && primaryHexChars <= 15, "primaryHexChars in [1,15]")
     require(secondaryHexChars >= 1 && secondaryHexChars <= 15, "secondaryHexChars in [1,15]")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val toks = docs.withColumn("toks", TextFunctions.tokens(col(textCol)))
     // fused span hashing (round 17 — the duplicateSpans rationale): one
     // md5 per position feeds BOTH 60-bit keys straight from the digest
@@ -543,9 +537,8 @@ object Dedup {
     val spans = toks
       .filter(size(col("toks")) >= width)
       .select(col(idCol),
-        explode(call_function("span_hashes", col("toks"),
-          lit(width), lit(1), lit(primaryHexChars),
-          lit(secondaryHexChars))).as("sp"))
+        explode(TextFunctions.spanHashes(col("toks"), width, 1,
+          primaryHexChars, secondaryHexChars)).as("sp"))
       .select(col(idCol), col("sp.start").as("start"),
         col("sp.h1").as("span_h"), col("sp.h2").as("span_h2"))
     // canonical occurrence per duplicated span: lexicographic min of

@@ -272,7 +272,6 @@ object Lexical {
                                  nDocs: DataFrame, queries: DataFrame,
                                  qTextCol: String,
                                  qIdCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(sat.sparkSession)
     sat.join(bm25QuerySide(dfreq, nDocs.select(col("n_docs")), queries,
         qTextCol, qIdCol), Seq("term"))
       .withColumn("contrib", col("idf") * col("sat"))
@@ -583,7 +582,6 @@ object Lexical {
     */
   def truncateByImpact(store: DataFrame, m: Int): DataFrame = {
     require(m >= 1, s"maxPostingsPerTerm must be >= 1: $m")
-    graft.plans.GraftExtensions.register(store.sparkSession)
     store
       .groupBy("term")
       .agg(TopK.topKNative(m, negate(col("contrib")), col("doc_id"))
@@ -643,7 +641,6 @@ object Lexical {
                                qTextCol: String, qIdCol: String,
                                k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(store.sparkSession)
     val qTerms = broadcast(queryTermsRanked(queries, qTextCol, qIdCol))
     foldExchange(store.join(qTerms, Seq("term")), k)
   }
@@ -736,7 +733,6 @@ object Lexical {
       : DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     val spark = store.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
     // the θ pass and the ub table BOTH traverse the truncation — when
@@ -943,7 +939,6 @@ object Lexical {
                                        aliveBroadcastMaxRows: Long = 4L << 20)
       : DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(storeB.sparkSession)
     val qTerms = queryTermsRanked(queries, qTextCol, qIdCol)
     val theta = bm25TopKFromContribStore(truncated, queries,
         qTextCol, qIdCol, k)
@@ -1060,7 +1055,6 @@ object Lexical {
                              stats: DataFrame, queries: DataFrame,
                              qTextCol: String, qIdCol: String,
                              k1: Double, b: Double): DataFrame = {
-    graft.plans.GraftExtensions.register(post.sparkSession)
     post.join(bm25QuerySide(dfreq, stats, queries, qTextCol, qIdCol),
         Seq("term"))
       .withColumn("contrib",
@@ -1253,7 +1247,6 @@ object Lexical {
   private def phraseCandidates(post: DataFrame, queries: DataFrame,
                                qTextCol: String,
                                qIdCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(post.sparkSession)
     val ph = queries
       .select(col(qIdCol).cast("long").as("q_id"),
         filter(TextFunctions.tokens(col(qTextCol)),
@@ -1460,7 +1453,6 @@ object Lexical {
     require(rerank.forall(_ >= k),
       s"rerank depth must be >= k: $rerank < $k")
     require(window >= 2, s"unordered window must be >= 2: $window")
-    graft.plans.GraftExtensions.register(post.sparkSession)
     // statsOverride: exact sidecar-rollup (n_docs, avgdl) — the
     // maintained-store serving path ([[graft.streaming
     // .StreamingLexicalIndex.serveSdm]]) slices `post` to the query's
@@ -1754,7 +1746,6 @@ object Lexical {
                mnz: Boolean = false): DataFrame = {
     require(ranked.nonEmpty, "combFuse needs at least one ranked frame")
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(ranked.head.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val tagged = ranked.zipWithIndex.map { case (r, i) =>
       r.select(col("q_id"), col("doc_id"),
@@ -1795,7 +1786,6 @@ object Lexical {
   def rrfFuse(ranked: Seq[DataFrame], k: Int, c: Int = 60): DataFrame = {
     require(ranked.nonEmpty, "rrfFuse needs at least one ranked frame")
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(ranked.head.sparkSession)
     val tagged = ranked.zipWithIndex.map { case (r, i) =>
       r.select(col("q_id"), col("doc_id"),
         lit(i).as("src"), col("rank").cast("long").as("r"))

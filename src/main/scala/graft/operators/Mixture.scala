@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 
 /** Deterministic domain-mixture sampling: downsample each source
   * (domain/language/quality tier) to a target rate, the way a training
@@ -21,7 +22,7 @@ object Mixture {
 
   /** Keep-decision column for one rate (0.0–1.0). */
   def keep(idCol: Column, rate: Double, salt: String = "mix"): Column =
-    call_function("md5_long60",
+    TextFunctions.md5Long60(
       concat(lit(salt + ":"), idCol.cast("string"))) % Scale <
       math.round(rate * Scale)
 
@@ -31,12 +32,11 @@ object Mixture {
   def sampleByWeights(df: DataFrame, idCol: String, sourceCol: String,
                       rates: Map[String, Double],
                       salt: String = "mix"): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val rateCol = rates.foldLeft(lit(1.0)) { case (acc, (src, r)) =>
       when(col(sourceCol) === src, lit(r)).otherwise(acc)
     }
     df.filter(
-      call_function("md5_long60",
+      TextFunctions.md5Long60(
         concat(lit(salt + ":"), col(idCol).cast("string"))) % Scale <
         round(rateCol * Scale).cast("long"))
   }

@@ -2,7 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+import graft.functions.TextFunctions
+import graft.plans.VecL2Q8
 
 /** Product quantization (Jégou, Douze, Schmid, "Product quantization
   * for nearest neighbor search", IEEE TPAMI 2011) — the compression
@@ -127,10 +131,9 @@ object ProductQuantizer {
                                   fraction: Double): DataFrame =
     if (fraction >= 1.0) corpus
     else {
-      graft.plans.GraftExtensions.register(corpus.sparkSession)
-      corpus.filter(
-        expr(s"md5_long60(concat('pqs:', cast($idCol as string))) " +
-          s"% 1000000 < ${(fraction * 1e6).toLong}"))
+      corpus.filter(TextFunctions.md5Long60(
+        concat(lit("pqs:"), col(idCol).cast("string"))) % 1000000 <
+        (fraction * 1e6).toLong)
     }
 
   def fit(corpus: DataFrame, idCol: String, vecCol: String,
@@ -629,7 +632,6 @@ object ProductQuantizer {
     require(candidates >= k, s"candidates $candidates < k $k")
     val spark = store8.sparkSession
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     val cand = ivfAdcTopK(store8, idCol, coarse, model, queries, candidates,
       nprobe).select(col("q_id"), col("nn_id"))
     val qdf = broadcast(queries.toDF("q_id", "qv"))
@@ -639,7 +641,8 @@ object ProductQuantizer {
       probeCells(q, coarseArr, nprobe) }.distinct
     // native fold (BINARY tier — zip_with doesn't apply to bytes, and
     // the kernel is the codegen'd hot path anyway)
-    val d2 = call_function("vec_l2_q8", col("qv"), col("vec8"), lit(inv))
+    val d2 = column(VecL2Q8(expression(col("qv")), expression(col("vec8")),
+      Literal(inv)))
     val w = Window.partitionBy("q_id")
       .orderBy(col("dist").asc, col("nn_id").asc)
     store8.filter(col("cell").isin(allCells: _*))

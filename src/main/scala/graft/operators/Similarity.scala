@@ -19,7 +19,7 @@ import graft.functions.VectorFunctions._
   * traversal per candidate pair instead of three, with bit-identical
   * results (the hoisted norm is the same expression evaluated once).
   * Dot products run on the fused `vec_dot` codegen expression
-  * (graft.plans.VecDot; registered here against the incoming session),
+  * (graft.plans.VecDot),
   * which is bit-identical to the zip_with/aggregate composition but
   * skips the intermediate products array on every pair.
   */
@@ -28,7 +28,6 @@ object Similarity {
   /** Exact top-k neighbors for each query vector (self excluded). */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame,
                      idCol: String, vecCol: String, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val q = broadcast(queries.select(
       col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       normNative(col(vecCol)).as("q_norm")))
@@ -50,7 +49,6 @@ object Similarity {
     */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               idCol: String, vecCol: String, bits: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
       normNative(col(vecCol)).as("n_norm"), signBucket(col(vecCol), bits).as("bucket"))
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
@@ -80,7 +78,6 @@ object Similarity {
   def lshTopKMultiProbe(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String, bits: Int,
                         nProbe: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     // only bits+1 distinct probes exist (base + one flip per dim):
     // clamp to match the kernel instead of ANSI-failing element_at
     val effProbe = math.min(nProbe, bits + 1)
@@ -165,7 +162,6 @@ object Similarity {
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame,
                   idCol: String, vecCol: String,
                   cents: Seq[Seq[Float]], nProbe: Int, k: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val centArr = typedLit(cents)
     val centNorm = typedLit(centroidNorms(cents))
 
@@ -212,7 +208,6 @@ object Similarity {
     */
   def nearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                    bits: Int, minCosine: Double): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val e = corpus.select(col(idCol), col(vecCol),
       normNative(col(vecCol)).as("nrm"), signBucket(col(vecCol), bits).as("bucket"))
     val a = e.select(col("bucket"), col(idCol).as("a"),
@@ -238,7 +233,6 @@ object Similarity {
     */
   def semanticDedupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          nCells: Int, minCosine: Double): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val cents = centroidVectors(corpus, idCol, vecCol, nCells)
     val centArr = typedLit(cents)
     val centNorm = typedLit(centroidNorms(cents))

@@ -1,9 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{Column, Encoder}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
 import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+
+import graft.plans.{BoundedTopK, OrderedFoldSumLong, PhraseTf, SdmFeatures}
 
 /** Mergeable bounded top-k aggregation — the batch paths' per-partition
   * heap ([[ProductQuantizer]]'s `ivfScan`) made STREAMING-LEGAL as a
@@ -94,44 +98,32 @@ object TopK {
     * same bounded partials, same output array bit for bit
     * (differential-spec-pinned), but the per-candidate update is a
     * primitive compare/insert instead of an encoder round-trip + Cand
-    * allocation + Vector copy. Use this on candidate-volume hot paths;
-    * requires [[graft.plans.GraftExtensions]] registered (callers'
-    * session setup already does).
+    * allocation + Vector copy. Use this on candidate-volume hot paths.
     */
-  def topKNative(k: Int, d: org.apache.spark.sql.Column,
-                 id: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("bounded_topk",
-      org.apache.spark.sql.functions.lit(k), d, id)
+  def topKNative(k: Int, d: Column, id: Column): Column =
+    agg(BoundedTopK(k, expression(d), expression(id)))
 
   /** Native key-ordered float fold with a BIGINT key
     * ([[graft.plans.OrderedFoldSumLong]]): sums `contrib` in
     * key-ascending order from +0.0 — bit-identical to
     * `aggregate(sort_array(collect_list(struct(key, ...))), 0.0,
     * acc + contrib)` when the key is unique per group, in one
-    * aggregate with no per-group array column. Same registration
-    * requirement as [[topKNative]].
+    * aggregate with no per-group array column.
     */
-  def orderedFoldSumLong(key: org.apache.spark.sql.Column,
-                         contrib: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("ordered_fold_sum_long",
-      key, contrib)
+  def orderedFoldSumLong(key: Column, contrib: Column): Column =
+    agg(OrderedFoldSumLong(expression(key), expression(contrib)))
 
   /** Native SDM candidate fold ([[graft.plans.SdmFeatures]]): per
     * (query, doc) group, the j-asc unigram contribution sum plus the
     * ordered/windowed co-occurrence pair counts for every adjacent
     * query position — result-identical to the
     * `sort_array(collect_list(...))` → interpreted fold → per-pair
-    * positions-probing expression chain in one aggregate. Same
-    * registration requirement as [[topKNative]].
+    * positions-probing expression chain in one aggregate.
     */
-  def sdmFeatures(j: org.apache.spark.sql.Column,
-                  contrib: org.apache.spark.sql.Column,
-                  positions: org.apache.spark.sql.Column,
-                  m: org.apache.spark.sql.Column,
-                  window: Int): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("sdm_features",
-      j, contrib, positions, m, org.apache.spark.sql.functions.lit(window))
+  def sdmFeatures(j: Column, contrib: Column, positions: Column, m: Column,
+                  window: Int): Column =
+    agg(SdmFeatures(expression(j), expression(contrib),
+      expression(positions), expression(m), window))
 
   /** Native phrase anchor count ([[graft.plans.PhraseTf]]): per
     * (query, doc) group, the number of j = 1 positions every matched
@@ -139,13 +131,10 @@ object TopK {
     * m phrase positions is unmatched) — result-identical to the
     * `collect_list` → completeness filter → flatten/forall/
     * array_contains expression pipeline in one aggregate, no per-group
-    * struct-array column. Same registration requirement as
-    * [[topKNative]].
+    * struct-array column.
     */
-  def phraseTf(j: org.apache.spark.sql.Column,
-               positions: org.apache.spark.sql.Column,
-               m: org.apache.spark.sql.Column)
-      : org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.call_function("phrase_tf",
-      j, positions, m)
+  def phraseTf(j: Column, positions: Column, m: Column): Column =
+    agg(PhraseTf(expression(j), expression(positions), expression(m)))
+
+  private def agg(f: AggregateFunction): Column = column(f.toAggregateExpression())
 }

@@ -211,6 +211,13 @@ case class SpanHashes(child: Expression, width: Int, stride: Int,
                       p: Int, s: Int)
     extends UnaryExpression with ExpectsInputTypes {
 
+  // a 16-byte digest holds 32 nibbles and a 60-bit key 15 of them; h2
+  // starts at nibble 17
+  require(width >= 1, s"span_hashes: width must be >= 1, got $width")
+  require(stride >= 1, s"span_hashes: stride must be >= 1, got $stride")
+  require(p >= 1 && p <= 15, s"span_hashes: p must be in 1..15, got $p")
+  require(s >= 1 && s <= 15, s"span_hashes: s must be in 1..15, got $s")
+
   override def inputTypes: Seq[DataType] = Seq(ArrayType(StringType))
   override def dataType: DataType = SpanHashes.resultType
 

@@ -21,7 +21,6 @@ object SketchQueries {
 
   /** Spark side: distinct 3-token-shingle hashes per source. */
   private def shingleHashes(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     Tables.documents(s, dir)
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("source"),
@@ -52,7 +51,6 @@ object SketchQueries {
     * key of the persisted "daily" sketches in q125.
     */
   private def shingleHashesByLang(s: SparkSession, dir: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     Tables.documents(s, dir)
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("source"), col("lang"),
@@ -291,7 +289,6 @@ object SketchQueries {
     //      each window's k-min set and estimate from the events table.
     Q("q124_stream_distinct_sketch", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.plans.GraftExtensions.register(s)
       val k = 64
       val ev = Tables.eventsUs(s, dir).filter(col("ts").isNotNull)
         .select(col("user_id"), col("ts"))
@@ -361,7 +358,6 @@ object SketchQueries {
     //      signal, the piece q124's tumbling windows cannot pin.
     Q("q126_stream_sliding_sketch", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.plans.GraftExtensions.register(s)
       val k = 64
       val ev = Tables.eventsUs(s, dir).filter(col("ts").isNotNull)
         .select(col("user_id"), col("ts"))
@@ -490,7 +486,6 @@ object SketchQueries {
     //      sample CONTENT all pinned bit for bit next to the exact
     //      reference sums.
     Q("q127_priority_sample_sums", (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val k = 16
       val docs = Tables.documents(s, dir)
         .select(col("source"), col("doc_id"), col("n_chars"))
@@ -556,7 +551,6 @@ object SketchQueries {
     //      sample, τ, and rank-ordered estimate sum.
     Q("q128_stream_priority_sample", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.plans.GraftExtensions.register(s)
       val k = 32
       val ev = Tables.eventsUs(s, dir).filter(col("ts").isNotNull)
         .select(col("event_id"), col("ts"),
@@ -634,7 +628,6 @@ object SketchQueries {
     //      the full group (a sort of the group — the cost the sample
     //      path avoids; at scale only the reference column pays it).
     Q("q129_sample_quantiles", (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       val k = 32
       val docs = Tables.documents(s, dir)
         .select(col("source"), col("doc_id"), col("n_chars"))
@@ -759,7 +752,6 @@ object SketchQueries {
     //      table and pins the verdicts at 1.
     Q("q134_stream_frequent_items", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.plans.GraftExtensions.register(s)
       val kU = 8; val kRef = 1024
       val ev = Tables.eventsUs(s, dir).filter(col("ts").isNotNull)
         .select(col("user_id"), col("event_type"), col("ts"))
@@ -983,7 +975,6 @@ object SketchQueries {
       val bank = new EventBank(s, root)
       bank.putEvents(base.filter((col("id") / 97) % 2 === 0).drop("id"))
       bank.putEvents(base.filter((col("id") / 97) % 2 === 1).drop("id"))
-      graft.plans.GraftExtensions.register(s)
       val stats = bank.sketchStats()
       val idx = bank.readIndex().select(
         floor(col("time") / lit(DayNs)).cast("long").as("day"),
@@ -1055,7 +1046,6 @@ object SketchQueries {
     //      the same DuckDB recompute. Pins that the registered SQL
     //      functions expand to exactly the Scala API's arithmetic.
     Q("q130_kmv_sql_surface", (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("q130_documents")
       val out = s.sql(s"""
         WITH sh AS (
@@ -1301,7 +1291,6 @@ object SketchQueries {
     //      rollup} matrix.
     Q("q142_stream_sliding_priority", (s, dir) => {
       import org.apache.spark.sql.streaming.Trigger
-      graft.plans.GraftExtensions.register(s)
       val k = 32
       val ev = Tables.eventsUs(s, dir).filter(col("ts").isNotNull)
         .select(col("event_id"), col("ts"),
@@ -1381,7 +1370,6 @@ object SketchQueries {
     //      regime at every test SF (combined support 31 ≤ 64), so
     //      every pair's n and top-3 CSV is bit-checked in DuckDB.
     Q("q140_freq_union_algebra", (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("q140_documents")
       val out = s.sql("""
         WITH tok AS (SELECT source, explode(split(text, ' ')) AS tok
@@ -1429,7 +1417,6 @@ object SketchQueries {
     //      vocab_est = exact distinct (k-min union of exact parts is
     //      exact).
     Q("q137_freq_quantile_sql_surface", (s, dir) => {
-      graft.plans.GraftExtensions.register(s)
       Tables.documents(s, dir).createOrReplaceTempView("q137_documents")
       val out = s.sql("""
         WITH tok AS (

@@ -32,7 +32,6 @@ object StreamingContamination {
     */
   def evalShingles(eval: DataFrame, textCol: String,
                    width: Int = 3): DataFrame = {
-    graft.plans.GraftExtensions.register(eval.sparkSession)
     eval.select(explode(array_distinct(Dedup.tokenShingleHashes(
       TextFunctions.tokens(col(textCol)), width))).as("h")).distinct()
   }
@@ -50,7 +49,6 @@ object StreamingContamination {
                          textCol: String, idCol: String, tsCol: String,
                          width: Int = 3, watermark: String = "10 seconds",
                          windowDur: String = "6 hours"): DataFrame = {
-    graft.plans.GraftExtensions.register(train.sparkSession)
     train
       .select(col(idCol).cast("long").as("doc_id"),
         col(textCol).as("_text"),

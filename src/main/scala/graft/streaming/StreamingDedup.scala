@@ -65,7 +65,6 @@ object StreamingDedup {
                           tsCol: String, width: Int, stride: Int,
                           minDocs: Long, watermark: String,
                           windowDur: String): DataFrame = {
-    graft.plans.GraftExtensions.register(stream.sparkSession)
     stream
       .withColumn("toks", TextFunctions.tokens(col(textCol)))
       .filter(size(col("toks")) >= width)
@@ -73,8 +72,8 @@ object StreamingDedup {
       // batch operator, same oracle fragments; secondary width 1
       // (round 18): only h1 is consumed, h1 unaffected
       .select(col(idCol).as("doc_id"), col(tsCol).as("_tsns"),
-        explode(call_function("span_hashes", col("toks"),
-          lit(width), lit(stride), lit(15), lit(1))).as("sp"))
+        explode(TextFunctions.spanHashes(col("toks"), width, stride, 15, 1))
+          .as("sp"))
       .select(col("doc_id"), col("sp.h1").as("span_h"),
         timestamp_micros(expr("_tsns div 1000")).as("_ts"))
       .withWatermark("_ts", watermark)
@@ -121,10 +120,6 @@ object StreamingDedup {
                     rowsPerBand: Int = 2, watermark: String = "10 seconds",
                     windowDur: String = "6 hours"): DataFrame = {
     import graft.operators.Dedup
-    // defensive registration (round 18, advisor item): the signature
-    // rides native shingle_hash60/int_minhash — external sessions not
-    // built via GraftSession would otherwise see undefined functions
-    graft.plans.GraftExtensions.register(stream.sparkSession)
     val sigs = stream
       .withColumn("toks", TextFunctions.tokens(col(textCol)))
       .select(col(idCol).as("doc_id"),
@@ -334,7 +329,6 @@ object StreamingDedup {
                              watermark: String = "10 seconds",
                              windowDur: String = "6 hours"): DataFrame = {
     import graft.functions.VectorFunctions._
-    graft.plans.GraftExtensions.register(stream.sparkSession)
     stream
       .select(col(idCol).cast("long").as("doc_id"),
         col(vecCol).as("vec"),

@@ -63,7 +63,6 @@ object StreamingHybrid {
                 truncated: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(kTier >= 1, s"kTier must be >= 1: $kTier")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(n =>
       StatePartitions.pinAll(Seq(store, index.cells) ++ truncated, n))
     // ONE admission gate feeds both tiers, so a window's lexical and
@@ -136,7 +135,6 @@ object StreamingHybrid {
                  maxQueriesPerTrigger: Option[Int] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(kTier >= 1, s"kTier must be >= 1: $kTier")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(n =>
       StatePartitions.pinAll(Seq(store, index.cells), n))
     val q = maxQueriesPerTrigger match {

@@ -85,7 +85,6 @@ object StreamingLexical {
       k: Int, watermark: String, windowDur: String,
       statePartitions: Option[Int]): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(StatePartitions.pin(store, _))
     val qTerms = queries
       .select(col(qIdCol).cast("long").as("q_id"),
@@ -195,7 +194,6 @@ object StreamingLexical {
       qIdCol: String, qTextCol: String, tsCol: String,
       k: Int, watermark: String, windowDur: String): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val qTerms = queries
       .select(col(qIdCol).cast("long").as("q_id"),
         col(qTextCol).as("qtext"),
@@ -326,7 +324,6 @@ object StreamingLexical {
                    statePartitions: Option[Int] = None,
                    maxQueriesPerTrigger: Option[Int] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(StatePartitions.pin(post, _))
     val stats = graft.operators.Lexical.corpusStatsFromPostings(post)
     val postW = post
@@ -434,7 +431,6 @@ object StreamingLexical {
     require(k >= 1, s"k must be >= 1: $k")
     require(n >= k, s"rerank depth must be >= k: $n < $k")
     require(window >= 2, s"unordered window must be >= 2: $window")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(StatePartitions.pin(post, _))
     val Lx = graft.operators.Lexical
     val stats = Lx.corpusStatsFromPostings(post)

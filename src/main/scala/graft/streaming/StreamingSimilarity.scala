@@ -1,7 +1,10 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+import graft.plans.{AdcDistTbl, AdcTable}
 
 /** Streaming similarity search — a live QUERY stream against a static
   * corpus index, the serving counterpart of the batch
@@ -33,7 +36,6 @@ object StreamingSimilarity {
     */
   def bucketCorpus(corpus: DataFrame, idCol: String, vecCol: String,
                    bits: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("n_vec"),
       normNative(col(vecCol)).as("n_norm"),
       signBucket(col(vecCol), bits).as("bucket"))
@@ -63,7 +65,6 @@ object StreamingSimilarity {
                    availableNow: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.streaming.Trigger
-    graft.plans.GraftExtensions.register(vectors.sparkSession)
     val writer = vectors.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -143,7 +144,6 @@ object StreamingSimilarity {
   def ivfIndexWith(corpus: DataFrame, idCol: String, vecCol: String,
                    cents: Seq[Seq[Float]]): IvfIndex = {
     import graft.operators.Similarity
-    graft.plans.GraftExtensions.register(corpus.sparkSession)
     val centArr = typedLit(cents)
     val centNorm = typedLit(Similarity.centroidNorms(cents))
     val cells = corpus
@@ -191,7 +191,6 @@ object StreamingSimilarity {
       watermark: String, windowDur: String,
       statePartitions: Option[Int]): DataFrame = {
     import graft.operators.Similarity
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(StatePartitions.pin(index.cells, _))
     val centArr = typedLit(index.centroids)
     val centNorm = typedLit(Similarity.centroidNorms(index.centroids))
@@ -285,7 +284,6 @@ object StreamingSimilarity {
                    watermark: String = "10 seconds",
                    windowDur: String = "6 hours",
                    statePartitions: Option[Int] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     require(nprobe >= 1 && nprobe <= coarse.length,
       s"nprobe $nprobe out of [1, ${coarse.length}]")
     // size the stream's state partitions to the state, not the data —
@@ -335,13 +333,14 @@ object StreamingSimilarity {
     // with the batch heaps.
     val probesT = probes
       .repartition(col("cell"))
-      .withColumn("tbl", call_function("adc_table", col("qr"), cbLit))
+      .withColumn("tbl",
+        column(AdcTable(expression(col("qr")), expression(cbLit))))
       .drop("qr")
     probesT
       .join(codeStore.select(col(idCol).as("nn_id"), col("cell"),
         col("codes")), Seq("cell"))
-      .withColumn("dist", call_function("adc_dist_tbl",
-        col("tbl"), col("codes"), lit(model.codebooks.length)))
+      .withColumn("dist", column(AdcDistTbl(expression(col("tbl")),
+        expression(col("codes")), Literal(model.codebooks.length))))
       .groupBy(window(col("_ts"), windowDur).as("w"), col("q_id"))
       .agg(graft.operators.TopK.topKNative(k, col("dist"), col("nn_id"))
         .as("top"))
@@ -374,7 +373,6 @@ object StreamingSimilarity {
                 windowDur: String = "6 hours",
                 nProbe: Int = 1,
                 statePartitions: Option[Int] = None): DataFrame = {
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     statePartitions.foreach(StatePartitions.pin(corpus, _))
     // nProbe > 1: each query probes its Hamming-1 neighbor buckets
     // too (multi-probe LSH — the batch `lshTopKMultiProbe` lever);

@@ -14,7 +14,6 @@ object PhraseAb {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import graft.functions.TextFunctions
     import graft.operators.Lexical

@@ -3833,7 +3833,6 @@ object ScaleBench {
           .collect().length
       }
       val (_, directS) = timed {
-        graft.plans.GraftExtensions.register(spark)
         bank.readIndex().select(
             floor(col("starttime") / lit(dayNs)).cast("long").as("day"),
             concat_ws(".", col("network"), col("station"),
@@ -3841,7 +3840,8 @@ object ScaleBench {
             ((col("endtime") - col("starttime")) / col("sampling_period"))
               .cast("long").as("n_samples"))
           .groupBy("day")
-          .agg(Sketches.kmvSketch(expr("md5_long60(seed_id)"),
+          .agg(Sketches.kmvSketch(
+              graft.functions.TextFunctions.md5Long60(col("seed_id")),
               bank.statsSeedK).as("sk"),
             Sketches.quantileSketch(col("n_samples"), bank.statsLenC)
               .as("lsk"),

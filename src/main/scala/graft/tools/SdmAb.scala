@@ -19,7 +19,6 @@ object SdmAb {
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = graft.core.GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftExtensions.register(spark)
     import graft.functions.TextFunctions
     import graft.operators.Lexical
     val k1 = 1.2
