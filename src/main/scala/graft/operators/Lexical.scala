@@ -1076,23 +1076,34 @@ object Lexical {
                    k: Int, k1: Double = 1.2, b: Double = 0.75,
                    maxQueryTerms: Int = 100000): DataFrame = {
     val spark = post.sparkSession
-    // limit-probe BEFORE collecting (the collectQueries device): the
-    // bound must trip before the driver materializes an unbounded
-    // term set, not after
-    val terms = queries
-      .select(explode(queryTerms(col(qTextCol)))
-        .as("term"))
-      .distinct().limit(maxQueryTerms + 1)
-      .collect().map(_.getString(0)).toSeq
-    require(terms.length <= maxQueryTerms,
-      s"over $maxQueryTerms distinct query terms (maxQueryTerms) — " +
-        "split the query batch or raise the bound")
-    val slice = post.filter(col("term").isInCollection(terms))
+    val slice = querySlice(post, queries, qTextCol, maxQueryTerms)
     val dfreq = slice.groupBy("term").agg(count(lit(1)).as("df"))
     val stats = spark.range(1).select(lit(nDocs).as("n_docs"),
       lit(avgdl).as("avgdl"))
     bm25TopKFromStore(slice, dfreq, stats, queries, qTextCol, qIdCol,
       k, k1, b)
+  }
+
+  /** The rows of `post` for the query batch's distinct terms: the
+    * terms collect driver-side behind a loud `maxQueryTerms` bound and
+    * push into the store scan as an IN filter, so term-sorted store
+    * files prune to the matched row groups. Every maintained-store
+    * server slices through here.
+    */
+  private[graft] def querySlice(post: DataFrame, queries: DataFrame,
+                                qTextCol: String,
+                                maxQueryTerms: Int): DataFrame = {
+    // limit-probe BEFORE collecting (the collectQueries device): the
+    // bound must trip before the driver materializes an unbounded
+    // term set, not after
+    val terms = queries
+      .select(explode(queryTerms(col(qTextCol))).as("term"))
+      .distinct().limit(maxQueryTerms + 1)
+      .collect().map(_.getString(0)).toSeq
+    require(terms.length <= maxQueryTerms,
+      s"over $maxQueryTerms distinct query terms (maxQueryTerms) — " +
+        "split the query batch or raise the bound")
+    post.filter(col("term").isInCollection(terms))
   }
 
   // ──────────────────── positional postings / phrase tier ────────────────────

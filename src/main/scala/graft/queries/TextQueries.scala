@@ -2628,97 +2628,6 @@ object TextQueries {
       SELECT q_id, doc_id, score, CAST(rank AS INT) AS rank
       FROM r WHERE rank <= 5"""), headline = true),
 
-    // ---- streaming phrase serving (round 16): q190's exact-phrase
-    //      top-k as a LIVE tier — a query stream against the static
-    //      positional store, the packed adjacency fold keyed by the
-    //      event-time window, then one per-query match collection
-    //      (df decides idf, so the window must see every match before
-    //      any rank exists — intrinsic to exact phrase scoring).
-    //      Oracle: q190's full positional DuckDB replay, window-stamped.
-    Q("q192_stream_phrase", (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val t0 = 1_600_000_000_000_000_000L
-      val docs = Tables.documents(s, dir)
-      val post = operators.Lexical.postingsPositional(
-        docs, "text", "doc_id").persist()
-      post.count()
-      val qs = docs.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"),
-          concat_ws(" ", slice(TextFunctions.tokens(col("text")), 1, 2))
-            .as("qtext"),
-          (lit(t0) + col("doc_id") * lit(1_000_000L)).as("ts"))
-      val flush = s.range(1).select(lit(999999999L).as("q_id"),
-        lit("zzflushzz").as("qtext"),
-        lit(t0 + 8L * 3600L * 1_000_000_000L).as("ts"))
-      val tmp = Scratch.tempDir("graft-q192").toString
-      qs.unionByName(flush).repartition(4)
-        .write.mode("overwrite").parquet(tmp)
-      val stream = s.readStream.schema(s.read.parquet(tmp).schema)
-        .parquet(tmp)
-      val out = graft.streaming.StreamingLexical.phraseStream(
-        stream, post, "q_id", "qtext", "ts", k = 5)
-      val sink = "q192_sink_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = out.writeStream.format("memory").queryName(sink)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val res = s.table(sink).filter(col("q_id") < 999999999L)
-        .localCheckpoint(true)
-      s.catalog.dropTempView(sink)
-      post.unpersist()
-      res
-    }, Some(s"""
-      WITH tk AS (SELECT doc_id, $toksSql AS toks FROM documents),
-      pp0 AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl,
-               unnest(list_transform(range(1, len(toks) + 1),
-                 i -> struct_pack(pos := i, term := toks[i]))) AS u
-             FROM tk),
-      pp AS (SELECT doc_id, dl, CAST(u.pos AS BIGINT) AS pos, u.term AS term
-             FROM pp0),
-      st AS (SELECT COUNT(*) AS n_docs,
-               CAST(SUM(CAST(len(toks) AS BIGINT)) AS DOUBLE)
-                 / CAST(COUNT(*) AS DOUBLE) AS avgdl
-             FROM tk),
-      qp0 AS (SELECT doc_id AS q_id, list_filter(toks[1:2], t -> t <> '') AS ph
-              FROM tk WHERE doc_id % 100 = 0),
-      qp1 AS (SELECT q_id, CAST(len(ph) AS BIGINT) AS m,
-                unnest(list_transform(range(1, len(ph) + 1),
-                  j -> struct_pack(j := j, term := ph[j]))) AS u
-              FROM qp0 WHERE len(ph) >= 1),
-      qpe AS (SELECT q_id, m, CAST(u.j AS BIGINT) AS j, u.term AS term
-              FROM qp1),
-      an AS (SELECT qpe.q_id, qpe.m, pp.doc_id, pp.dl,
-               pp.pos - qpe.j + 1 AS anchor, qpe.j
-             FROM pp JOIN qpe USING (term)),
-      occ AS (SELECT q_id, doc_id, dl, anchor
-              FROM an GROUP BY q_id, doc_id, dl, m, anchor
-              HAVING COUNT(DISTINCT j) = m),
-      ptf AS (SELECT q_id, doc_id, dl, COUNT(*) AS tf
-              FROM occ GROUP BY 1, 2, 3),
-      pdf AS (SELECT q_id, COUNT(*) AS df FROM ptf GROUP BY 1),
-      sc AS (SELECT p.q_id, p.doc_id,
-               ROUND(ln(CAST(1.0 AS DOUBLE)
-                   + (CAST(st.n_docs AS DOUBLE) - CAST(d.df AS DOUBLE)
-                      + CAST(0.5 AS DOUBLE))
-                     / (CAST(d.df AS DOUBLE) + CAST(0.5 AS DOUBLE)))
-                 * (CAST(p.tf AS DOUBLE)
-                    * (CAST(1.2 AS DOUBLE) + CAST(1.0 AS DOUBLE)))
-                 / (CAST(p.tf AS DOUBLE)
-                    + CAST(1.2 AS DOUBLE) * (CAST(1.0 AS DOUBLE)
-                       - CAST(0.75 AS DOUBLE)
-                       + CAST(0.75 AS DOUBLE) * CAST(p.dl AS DOUBLE)
-                         / st.avgdl)), 6) AS score
-             FROM ptf p JOIN pdf d USING (q_id) CROSS JOIN st),
-      r AS (SELECT q_id, doc_id, score,
-              row_number() OVER (PARTITION BY q_id
-                ORDER BY score DESC, doc_id ASC) AS rank
-            FROM sc)
-      SELECT (1600000000000000000 + q_id * 1000000)
-               - (1600000000000000000 + q_id * 1000000) % 21600000000000
-               AS window_ns,
-             q_id, doc_id, score, CAST(rank AS INT) AS rank
-      FROM r WHERE rank <= 5""")),
-
     // ---- SDM off the maintained positional store (round 17): rerank
     //      passthrough included upstream, but this row pins the FULL
     //      three-feature traversal (q193's oracle verbatim) served from

@@ -4,41 +4,53 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.bank.TxTable
 import graft.functions.TextFunctions
 import graft.operators.Lexical
 
 /** Incremental maintenance for the BM25 lexical store — the
-  * [[StreamingAnnIndex]] loop applied to text retrieval. The split of
-  * what stays fresh and what goes stale is different from ANN, and the
-  * design follows it:
+  * [[StreamingAnnIndex]] loop applied to text retrieval. One lifecycle
+  * serves three postings layouts:
   *
-  *   - RAW POSTINGS (term, doc, tf, dl) are PER-DOCUMENT facts — they
-  *     never go stale. Arriving documents encode scan-locally
-  *     ([[Lexical.postings]] is a per-row hash count, no shuffle, no
-  *     state) and commit exactly-once per micro-batch (`appendOnce`
-  *     batch tags), term-sorted per batch so a query's `term IN (...)`
-  *     prunes row groups. The maintained postings store is row-SET
-  *     equal to a from-scratch build under any batching — the q178
-  *     oracle.
-  *   - CORPUS STATS (N, Σdl) are pure sums: each batch appends one
-  *     kilobyte partial; the rollup is exact, never an estimate, and
-  *     the served avgdl is the same single division the batch
+  *   - FLAT ([[Lexical.postings]]: term, doc, dl, tf) — the BM25 store
+  *     (`bootstrap`, `run`, `serve`, the factored generations);
+  *   - POSITIONAL ([[Lexical.postingsPositional]]: flat + positions) —
+  *     phrase and SDM serving (`bootstrapP`, `runP`, `servePhrase`,
+  *     `serveSdm`);
+  *   - PACKED BM25F ([[Lexical.postingsFieldsPacked]]: one row per
+  *     (term, doc) with the per-field entries) — the field-aware
+  *     factored generations (`bootstrapF`, `runF`, `…FactoredF`).
+  *
+  * Each step — bootstrap, the AvailableNow maintainer with its
+  * compaction cadence, the stats rollup, the full factored build, the
+  * refresh decision with its delta build, factored serving — has one
+  * body, parameterized by a [[PostingsLayout]] that carries what
+  * differs: row encoder, stats partial and rollup, sat and df builders,
+  * sidecar codec, tag prefixes, and the store check.
+  *
+  * The split of what stays fresh and what goes stale:
+  *
+  *   - RAW POSTINGS are PER-DOCUMENT facts — they never go stale.
+  *     Arriving documents encode scan-locally (a per-row hash count, no
+  *     shuffle, no state) and commit exactly-once per micro-batch
+  *     (`appendOnce` batch tags), term-sorted so a query's
+  *     `term IN (...)` prunes row groups. The maintained store is
+  *     row-SET equal to a from-scratch build under any batching — the
+  *     q178 oracle.
+  *   - CORPUS STATS (N, Σdl — per field for BM25F) are pure sums: each
+  *     batch appends a kilobyte partial; the rollup is exact, and the
+  *     served avgdl is the same single division the batch
   *     [[Lexical.corpusStats]] computes.
   *   - df/idf are computed LIVE at query time from a term-pruned slice
   *     ([[Lexical.bm25TopKLive]]) — so the maintained-raw serving path
-  *     is ALWAYS exact (q179). What DOES go stale is the PRECOMPUTED
-  *     contribution store the streaming serving tier reads
-  *     ([[StreamingLexical.bm25Stream]]): contrib bakes in (N, avgdl,
-  *     df) at build time, and every arriving document shifts all
-  *     three. That store is managed as GENERATIONS ([[AnnGenerations]]
-  *     — store = contrib table, sidecar = the build-time stats row),
-  *     with [[staleReport]] comparing the generation's baked stats to
-  *     the sidecar rollup (two scalars — kilobytes, no store scan) and
-  *     [[regenerateIfStale]] rebuilding from the maintained postings +
-  *     current stats and publishing through the atomic pointer swap
-  *     (q180 reads the retrained generation through the pointer).
+  *     is ALWAYS exact (q179). What DOES go stale is a PRECOMPUTED
+  *     store baked at (N, avgdl, df): the monolithic contrib store
+  *     ([[buildGeneration]], q180) and the factored sat/df generations
+  *     ([[refreshFactored]], q182). Both are managed as
+  *     [[AnnGenerations]] published through the atomic pointer swap,
+  *     and both go stale by the one permille rule ([[outside]]).
   */
 object StreamingLexicalIndex {
 
@@ -48,26 +60,153 @@ object StreamingLexicalIndex {
 
   import ParallelCommits.inParallel
 
-  /** One exact stats partial: (n_docs, sum_dl) of this batch. */
-  private def statsPartial(batch: DataFrame, textCol: String,
-                           tag: String): DataFrame =
-    batch
-      .select(size(TextFunctions.tokens(col(textCol))).cast("long")
-        .as("dl"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("src_tag", lit(tag))
+  /** Per-field exact rollup: (N, Σdl, avgdl). */
+  private type FieldStats = Seq[(Long, Long, Double)]
+
+  /** What differs between the postings layouts of a maintained store:
+    * the `appendOnce` tag prefixes of the maintainer (`tag`) and of the
+    * factored generations (`genTag`), the suffix of the layout's entry
+    * names for messages (`entry`), and whether stats and sidecar rows
+    * are one per field, keyed by `field` (`perField`). Tags and column
+    * sets are on-disk facts: a replayed batch from an existing
+    * checkpoint must meet the tag it committed under.
+    */
+  private sealed abstract class PostingsLayout(val tag: String,
+                                               val genTag: String,
+                                               val entry: String,
+                                               val perField: Boolean) {
+    /** `src_tag` of batch `id`'s stats partial. */
+    def batchSrc(id: Long): String = s"$tag-batch-$id"
+    /** `textCol` names the text of a single-field layout. */
+    def rows(docs: DataFrame, textCol: String, idCol: String): DataFrame
+    def partial(docs: DataFrame, textCol: String, srcTag: String): DataFrame
+    def rollup(statsTx: TxTable): FieldStats
+    def sat(post: DataFrame, avgdl0: Seq[Double], k1: Double,
+            b: Double): DataFrame
+    def docFreq(post: DataFrame): DataFrame
+
+    /** A generation's sidecar: the baked (N, Σdl, avgdl₀) per field and
+      * the pinned postings and sat versions.
+      */
+    def sidecar(spark: SparkSession, st: FieldStats, postV: Long,
+                satV: Long): DataFrame =
+      st.zipWithIndex.map { case ((n, s, a), i) =>
+        val row = Seq(lit(n).as("n_docs"), lit(s).as("sum_dl"),
+          lit(a).as("avgdl0"), lit(postV).as("post_version"),
+          lit(satV).as("sat_version"))
+        spark.range(1)
+          .select((if (perField) lit(i).as("field") +: row else row): _*)
+      }.reduce(_ unionByName _)
+
+    def readSidecar(sideTx: TxTable): (FieldStats, Long, Long) = {
+      val rows = sideTx.read().collect()
+        .sortBy(r => if (perField) r.getAs[Int]("field") else 0)
+      def long(c: String) = rows.head.getAs[Long](c)
+      (rows.toSeq.map(r => (r.getAs[Long]("n_docs"), r.getAs[Long]("sum_dl"),
+        r.getAs[Double]("avgdl0"))), long("post_version"), long("sat_version"))
+    }
+
+    /** Fails unless `post` holds this layout; by-name, so a layout with
+      * no check never reads the store.
+      */
+    def check(post: => DataFrame): Unit = ()
+  }
+
+  /** One text column, encoded by `encode(docs, textCol, idCol)`. */
+  private sealed abstract class SingleField(
+      tag: String, entry: String,
+      encode: (DataFrame, String, String) => DataFrame)
+      extends PostingsLayout(tag, "flex", entry, perField = false) {
+    def rows(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+      encode(docs, textCol, idCol)
+    def partial(docs: DataFrame, textCol: String,
+                srcTag: String): DataFrame =
+      docs
+        .select(size(TextFunctions.tokens(col(textCol))).cast("long")
+          .as("dl"))
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .withColumn("src_tag", lit(srcTag))
+    def rollup(statsTx: TxTable): FieldStats = Seq(stats(statsTx))
+    def sat(post: DataFrame, avgdl0: Seq[Double], k1: Double,
+            b: Double): DataFrame =
+      Lexical.bm25SatFromPostings(post, avgdl0.head, k1, b)
+    def docFreq(post: DataFrame): DataFrame = Lexical.docFreq(post)
+  }
+
+  private case object Flat extends SingleField("lex", "", Lexical.postings)
+
+  /** Positional postings are per-document facts exactly like the flat
+    * layout; phrase/SDM serving slices the term-sorted store to the
+    * query's terms instead of rebuilding it per call.
+    */
+  private case object Positional
+      extends SingleField("lexpos", "P", Lexical.postingsPositional) {
+    // the src_tag positional stores have always carried
+    override def batchSrc(id: Long): String = s"lexpos-stats-src-$id"
+  }
+
+  /** BM25F: ONE row per (term, doc) with the field-asc (field, tf)
+    * entries and the per-doc dls vector, so every generation build
+    * folds the pseudo-frequency SCAN-LOCALLY (no (term, doc)-keyed
+    * exchange) and any-field df is a plain row count. A doc's rows
+    * across all fields arrive in its batch, so the delta algebra holds
+    * unchanged; the baked scalar is the per-field avgdl vector. Sat
+    * doubles are bit-identical to the flat one-row-per-(field, term,
+    * doc) fold (LexicalSpec, StreamingLexicalIndexSpec), and a store in
+    * that flat layout is refused, never misread.
+    */
+  private final case class Packed(fields: Seq[Lexical.FieldSpec])
+      extends PostingsLayout("flexf", "flexf", "F", perField = true) {
+    def rows(docs: DataFrame, textCol: String, idCol: String): DataFrame =
+      Lexical.postingsFieldsPacked(docs, fields, idCol)
+    def partial(docs: DataFrame, textCol: String,
+                srcTag: String): DataFrame =
+      fields.zipWithIndex.map { case (f, i) =>
+        docs.select(lit(i).as("field"),
+          size(TextFunctions.tokens(col(f.textCol))).cast("long").as("dl"))
+      }.reduce(_ unionByName _)
+        .groupBy("field")
+        .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+        .withColumn("src_tag", lit(srcTag))
+    def rollup(statsTx: TxTable): FieldStats = {
+      val rows = statsTx.read().groupBy("field")
+        .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
+        .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
+      require(rows.size == fields.length,
+        s"stats store has ${rows.size} fields, expected ${fields.length} — " +
+          "bootstrapF first")
+      fields.indices.map(rows).map { case (n, s) => (n, s, s.toDouble / n) }
+    }
+    def sat(post: DataFrame, avgdl0: Seq[Double], k1: Double,
+            b: Double): DataFrame =
+      Lexical.bm25fSatFromPackedPostings(post, avgdl0, fields, k1)
+    def docFreq(post: DataFrame): DataFrame = Lexical.docFreqPacked(post)
+    // a flat-layout store would be misread: packed batches would append
+    // to a flat table, and docFreqPacked would count its per-field rows
+    override def check(post: => DataFrame): Unit = {
+      val cols = post.columns
+      if (cols.nonEmpty && !Set("dls", "entries").subsetOf(cols.toSet))
+        throw new IllegalStateException(
+          s"BM25F postings store has columns ${cols.mkString(", ")}" +
+            " — not the packed layout (term, doc_id, dls, entries); " +
+            "rebuild it with bootstrapF")
+    }
+  }
+
+  // ─────────────────────── the lifecycle, once ───────────────────────
 
   /** Bulk-load the postings store + the baseline stats partial. Both
     * commits are tagged — a re-run is a no-op.
     */
-  def bootstrap(corpus: DataFrame, idCol: String, textCol: String,
-                postTx: TxTable, statsTx: TxTable): Unit = {
+  private def load(layout: PostingsLayout, corpus: DataFrame,
+                   textCol: String, idCol: String,
+                   postTx: TxTable, statsTx: TxTable): Unit = {
+    val t = layout.tag
     inParallel(
-      postTx.appendOnce(
-        Lexical.postings(corpus, textCol, idCol).sort("term"),
-        tag = "lex-baseline"),
-      statsTx.appendOnce(statsPartial(corpus, textCol, "lex-baseline"),
-        tag = "lex-stats-baseline"))
+      postTx.appendOnce(layout.rows(corpus, textCol, idCol).sort("term"),
+        tag = s"$t-baseline"),
+      statsTx.appendOnce(layout.partial(corpus, textCol, s"$t-baseline"),
+        tag = s"$t-stats-baseline"))
     ()
   }
 
@@ -78,40 +217,35 @@ object StreamingLexicalIndex {
     * long-lived store otherwise overlaps every batch's term range and
     * query pruning degrades to file count).
     */
-  def run(spark: SparkSession, docsDir: String,
-          postTx: TxTable, statsTx: TxTable,
-          checkpointDir: String, idCol: String = "doc_id",
-          textCol: String = "text",
-          availableNow: Boolean = true,
-          maxFilesPerTrigger: Int = 1000,
-          compactEvery: Int = 0): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(docSchema(idCol, textCol))
+  private def maintain(layout: PostingsLayout, spark: SparkSession,
+                       docsDir: String, schema: StructType,
+                       textCol: String, idCol: String, postTx: TxTable,
+                       statsTx: TxTable, checkpointDir: String,
+                       availableNow: Boolean, maxFilesPerTrigger: Int,
+                       compactEvery: Int): StreamingQuery = {
+    layout.check(postTx.read())
+    val writer = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(docsDir)
-    val writer = stream.writeStream
+      .parquet(docsDir).writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // round 17: the old localCheckpoint(true) here bought nothing —
-        // both commits tokenize for themselves either way; it only
-        // avoided re-READING the (arrival-sized) batch files at the
-        // cost of an extra eager materialization job per trigger plus
-        // a block-manager copy of the raw text payload. foreachBatch
-        // re-executes over the trigger's pinned file list, so the two
-        // reads are deterministic.
-        // Delta appends sort WITHIN partitions (term-clustered files
-        // for row-group pruning) instead of globally: a global sort of
-        // an arrival-sized delta paid a range-sampling job + exchange
-        // per trigger; the scheduled compaction below is what restores
-        // store-wide disjoint term ranges — its job, on its cadence.
+        // No localCheckpoint of the batch: both commits tokenize for
+        // themselves, and foreachBatch re-executes over the trigger's
+        // pinned file list, so the two reads are deterministic; an
+        // eager materialization would cost one job per trigger plus a
+        // block-manager copy of the raw text. Delta appends sort WITHIN
+        // partitions (term-clustered files for row-group pruning): a
+        // global sort of an arrival-sized delta pays a range-sampling
+        // job + exchange per trigger, and the scheduled compaction
+        // below is what restores store-wide disjoint term ranges.
+        val t = layout.tag
         inParallel(
           postTx.appendOnce(
-            Lexical.postings(batch, textCol, idCol)
-              .sortWithinPartitions("term"),
-            tag = s"lex-batch-$batchId"),
+            layout.rows(batch, textCol, idCol).sortWithinPartitions("term"),
+            tag = s"$t-batch-$batchId"),
           statsTx.appendOnce(
-            statsPartial(batch, textCol, s"lex-batch-$batchId"),
-            tag = s"lex-stats-$batchId"))
+            layout.partial(batch, textCol, layout.batchSrc(batchId)),
+            tag = s"$t-stats-$batchId"))
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
           inParallel(postTx.compact(Seq("term")), statsTx.compact())
           ()
@@ -121,98 +255,69 @@ object StreamingLexicalIndex {
       .start()
   }
 
-  // ──────────── maintained POSITIONAL store (round 17) ────────────
-  //
-  // Positional postings are per-document facts exactly like the flat
-  // layout — a document's (term → positions) map never goes stale and
-  // encodes scan-locally — so the same bootstrap/append/compact/serve
-  // lifecycle applies verbatim. What this closes: phrase/SDM serving
-  // previously rebuilt the positional store AD HOC per call
-  // (persistRotating), a 288 s / ~50 GB-spill build at 10⁷ docs
-  // (BASELINE phrase row). Serving slices the term-sorted store to
-  // the query's terms (the bm25TopKLive IN-pushdown device — row
-  // groups prune) and threads the exact sidecar-rollup stats, so the
-  // served rows are hash-equal to a from-scratch build.
+  /** [[load]] the flat store: [[Lexical.postings]] rows. */
+  def bootstrap(corpus: DataFrame, idCol: String, textCol: String,
+                postTx: TxTable, statsTx: TxTable): Unit =
+    load(Flat, corpus, textCol, idCol, postTx, statsTx)
 
-  /** Bulk-load the POSITIONAL postings store + the baseline stats
-    * partial (tagged — a re-run is a no-op).
+  /** [[maintain]] the flat store. */
+  def run(spark: SparkSession, docsDir: String, postTx: TxTable,
+          statsTx: TxTable, checkpointDir: String, idCol: String = "doc_id",
+          textCol: String = "text", availableNow: Boolean = true,
+          maxFilesPerTrigger: Int = 1000,
+          compactEvery: Int = 0): StreamingQuery =
+    maintain(Flat, spark, docsDir, docSchema(idCol, textCol), textCol,
+      idCol, postTx, statsTx, checkpointDir, availableNow,
+      maxFilesPerTrigger, compactEvery)
+
+  /** [[load]] the positional store: [[Lexical.postingsPositional]]
+    * rows.
     */
   def bootstrapP(corpus: DataFrame, idCol: String, textCol: String,
-                 postTx: TxTable, statsTx: TxTable): Unit = {
-    inParallel(
-      postTx.appendOnce(
-        Lexical.postingsPositional(corpus, textCol, idCol).sort("term"),
-        tag = "lexpos-baseline"),
-      statsTx.appendOnce(statsPartial(corpus, textCol, "lexpos-baseline"),
-        tag = "lexpos-stats-baseline"))
-    ()
-  }
+                 postTx: TxTable, statsTx: TxTable): Unit =
+    load(Positional, corpus, textCol, idCol, postTx, statsTx)
 
-  /** Incremental positional maintainer — [[run]] with the positional
-    * encode (per-row, no shuffle; an appended doc batch produces
-    * exactly its own positional rows, so the maintained store is
-    * row-set equal to a rebuild under any batching).
-    */
-  def runP(spark: SparkSession, docsDir: String,
-           postTx: TxTable, statsTx: TxTable,
-           checkpointDir: String, idCol: String = "doc_id",
-           textCol: String = "text",
-           availableNow: Boolean = true,
+  /** [[maintain]] the positional store. */
+  def runP(spark: SparkSession, docsDir: String, postTx: TxTable,
+           statsTx: TxTable, checkpointDir: String, idCol: String = "doc_id",
+           textCol: String = "text", availableNow: Boolean = true,
            maxFilesPerTrigger: Int = 1000,
-           compactEvery: Int = 0): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(docSchema(idCol, textCol))
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(docsDir)
-    val writer = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // no localCheckpoint, delta sorted within partitions — the
-        // run() rationale verbatim (round 17)
-        inParallel(
-          postTx.appendOnce(
-            Lexical.postingsPositional(batch, textCol, idCol)
-              .sortWithinPartitions("term"),
-            tag = s"lexpos-batch-$batchId"),
-          statsTx.appendOnce(
-            statsPartial(batch, textCol, s"lexpos-stats-src-$batchId"),
-            tag = s"lexpos-stats-$batchId"))
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          inParallel(postTx.compact(Seq("term")), statsTx.compact())
-          ()
-        }
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
-  }
+           compactEvery: Int = 0): StreamingQuery =
+    maintain(Positional, spark, docsDir, docSchema(idCol, textCol),
+      textCol, idCol, postTx, statsTx, checkpointDir, availableNow,
+      maxFilesPerTrigger, compactEvery)
+
+  /** [[load]] the packed BM25F store: [[Lexical.postingsFieldsPacked]]
+    * rows and per-field stats partials; `fields` name the text columns.
+    */
+  def bootstrapF(corpus: DataFrame, fields: Seq[Lexical.FieldSpec],
+                 idCol: String, postTx: TxTable, statsTx: TxTable): Unit =
+    load(Packed(fields), corpus, "", idCol, postTx, statsTx)
+
+  /** [[maintain]] the packed BM25F store (drains; no compaction). A
+    * store in another layout is refused.
+    */
+  def runF(spark: SparkSession, docsDir: String,
+           fields: Seq[Lexical.FieldSpec], postTx: TxTable, statsTx: TxTable,
+           checkpointDir: String, schema: StructType, idCol: String = "doc_id",
+           maxFilesPerTrigger: Int = 1000): StreamingQuery =
+    maintain(Packed(fields), spark, docsDir, schema, "", idCol, postTx,
+      statsTx, checkpointDir, availableNow = true, maxFilesPerTrigger,
+      compactEvery = 0)
 
   /** The term-pruned slice + stats-row pair every maintained
-    * positional server shares: the query's distinct terms collect
-    * driver-side behind a loud bound and push into the store scan as
-    * an IN filter (term-sorted files prune to matched row groups);
-    * corpus stats ride a one-row frame from the exact rollup.
+    * positional server shares; the query-term collect and the stats
+    * rollup are independent driver actions (guide §2.6) — overlapped.
     */
   private def slicedWithStats(postTx: TxTable, statsTx: TxTable,
                               queries: DataFrame, qTextCol: String,
                               maxQueryTerms: Int)
       : (DataFrame, DataFrame) = {
-    val spark = queries.sparkSession
-    // the query-term collect and the stats rollup are independent
-    // driver actions (guide §2.6) — overlap them
-    val (terms, statsTriple) = inParallel(
-      queries
-        .select(explode(Lexical.queryTerms(col(qTextCol))).as("term"))
-        .distinct().limit(maxQueryTerms + 1)
-        .collect().map(_.getString(0)).toSeq,
+    val (slice, (n, _, avgdl)) = inParallel(
+      Lexical.querySlice(postTx.read(), queries, qTextCol, maxQueryTerms),
       stats(statsTx))
-    require(terms.length <= maxQueryTerms,
-      s"over $maxQueryTerms distinct query terms (maxQueryTerms) — " +
-        "split the query batch or raise the bound")
-    val (n, _, avgdl) = statsTriple
-    val slice = postTx.read().filter(col("term").isInCollection(terms))
-    val statsRow = spark.range(1).select(lit(n).as("n_docs"),
-      lit(avgdl).as("avgdl"))
-    (slice, statsRow)
+    (slice, queries.sparkSession.range(1).select(lit(n).as("n_docs"),
+      lit(avgdl).as("avgdl")))
   }
 
   /** Exact phrase serving off the maintained positional store —
@@ -262,8 +367,7 @@ object StreamingLexicalIndex {
     require(!r.isNullAt(0) && !r.isNullAt(1),
       s"stats store is empty (${statsTx.logDir}) — bootstrap() or run() " +
         "must commit at least one stats partial before serving")
-    val n = r.getLong(0)
-    val s = r.getLong(1)
+    val (n, s) = (r.getLong(0), r.getLong(1))
     (n, s, s.toDouble / n.toDouble)
   }
 
@@ -278,8 +382,21 @@ object StreamingLexicalIndex {
       qTextCol, qIdCol, k, k1, b)
   }
 
-  /** Build + PUBLISH a contrib-store generation from the maintained
-    * postings and the current stats rollup. The generation's sidecar
+  /** `now` against the baked `baked` in permille: 1000 = parity (the
+    * drift_permille convention).
+    */
+  private def permille(now: Double, baked: Double): Long =
+    math.round(1000.0 * now / baked)
+
+  /** The one staleness rule: a permille further than `band` from
+    * parity.
+    */
+  private def outside(permille: Long, band: Long): Boolean =
+    math.abs(permille - 1000) > band
+
+  /** Build + PUBLISH a monolithic contrib-store generation from the
+    * maintained flat postings and the current stats rollup. contrib
+    * bakes (N, avgdl, df) at build time; the generation's sidecar
     * records the baked (n_docs, sum_dl) so staleness is two exact
     * scalar comparisons later. Returns the published generation.
     */
@@ -302,8 +419,8 @@ object StreamingLexicalIndex {
   }
 
   /** Staleness of the published contrib generation vs the live rollup:
-    * permille ratios of N and avgdl (1000 = parity — the drift_permille
-    * convention). None before any generation exists.
+    * permille ratios of N and avgdl (1000 = parity). None before any
+    * generation exists.
     */
   final case class StaleReport(gen: Long, nGen: Long, nNow: Long,
                                avgdlGen: Double, avgdlNow: Double,
@@ -312,16 +429,10 @@ object StreamingLexicalIndex {
   def staleReport(gens: AnnGenerations, statsTx: TxTable)
       : Option[StaleReport] =
     gens.current().map { case (g, _, genStatsTx) =>
-      val r = genStatsTx.read()
-        .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
-        .head()
-      val nGen = r.getLong(0)
-      val sGen = r.getLong(1)
-      val avgdlGen = sGen.toDouble / nGen.toDouble
+      val (nGen, _, avgdlGen) = stats(genStatsTx)
       val (nNow, _, avgdlNow) = stats(statsTx)
       StaleReport(g, nGen, nNow, avgdlGen, avgdlNow,
-        math.round(1000.0 * nNow.toDouble / nGen.toDouble),
-        math.round(1000.0 * avgdlNow / avgdlGen))
+        permille(nNow.toDouble, nGen.toDouble), permille(avgdlNow, avgdlGen))
     }
 
   /** Generation-following streaming serving: each micro-batch of
@@ -370,36 +481,37 @@ object StreamingLexicalIndex {
                         maxPostingsPerTerm: Int = Int.MaxValue)
       : Option[Long] =
     staleReport(gens, statsTx).flatMap { rep =>
-      val fire = math.abs(rep.nPermille - 1000) > thresholdPermille ||
-        math.abs(rep.avgdlPermille - 1000) > thresholdPermille
+      val fire = outside(rep.nPermille, thresholdPermille) ||
+        outside(rep.avgdlPermille, thresholdPermille)
       if (!fire) None
       else Some(buildGeneration(gens, postTx, statsTx, k1, b,
         maxPostingsPerTerm))
     }
 
-  // ---- FACTORED generations (round 15): arrival-sized refreshes. ----
+  // ---- FACTORED generations: arrival-sized refreshes. ----
   //
-  // The monolithic contrib store above must rebuild CORPUS-sized on
-  // every staleness fire, because contrib bakes all three globals
-  // (N, df, avgdl) into one float. The factored store splits them by
-  // WHAT actually invalidates them:
+  // The monolithic contrib store must rebuild CORPUS-sized on every
+  // staleness fire, because contrib bakes all three globals (N, df,
+  // avgdl) into one float. The factored store splits them by WHAT
+  // actually invalidates them:
   //
-  //   - sat = tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl₀)) — a per-document
-  //     fact once avgdl₀ is baked. Lives in ONE long-lived TxTable;
-  //     arriving postings append exactly their own sat rows
-  //     (arrival-sized), and a generation pins the sat VERSION it
-  //     serves (TxTable time travel = snapshot isolation between
-  //     generations for free).
+  //   - sat = tf·(k1+1)/(tf + k1·(1−b+b·dl/avgdl₀)) (BM25F: the field
+  //     fold of the pseudo-frequency) — a per-document fact once avgdl₀
+  //     is baked. Lives in ONE long-lived TxTable; arriving postings
+  //     append exactly their own sat rows (arrival-sized), and a
+  //     generation pins the sat VERSION it serves (TxTable time travel
+  //     = snapshot isolation between generations for free).
   //   - idf(N, df) — moves with EVERY arrival, but is only
   //     VOCABULARY-sized. Each generation carries a full df table; the
   //     incremental build derives it as old-df ⊕ delta-term-counts
-  //     (a vocab-sized merge — never a corpus-sized docFreq pass).
-  //   - avgdl₀ — the one baked scalar. While the live avgdl stays
-  //     inside `avgdlBandPermille`, refreshes take the DELTA path;
-  //     once it drifts out, the loop re-bakes sat for the whole corpus
-  //     (a full build, the documented floor) via a versioned OVERWRITE
-  //     of the sat table — old generations keep reading their pinned
-  //     pre-overwrite snapshots.
+  //     (a vocab-sized merge — never a corpus-sized docFreq pass; a
+  //     delta doc is NEW, so the sum stays integer-exact).
+  //   - avgdl₀ — the one baked scalar (per field for BM25F). While
+  //     every live avgdl stays inside `avgdlBandPermille`, refreshes
+  //     take the DELTA path; once one drifts out, the loop re-bakes sat
+  //     for the whole corpus (a full build, the documented floor) via a
+  //     versioned OVERWRITE of the sat table — old generations keep
+  //     reading their pinned pre-overwrite snapshots.
   //
   // Serving a factored generation is exact BM25 at (N_live, df_live,
   // avgdl₀): idf computes on the query side from the generation's df
@@ -407,47 +519,6 @@ object StreamingLexicalIndex {
   // top-k is BIT-IDENTICAL to a from-scratch factored rebuild at the
   // same (N, avgdl₀) — spec-pinned — because df merge arithmetic is
   // integer-exact and sat/idf/fold expressions are shared.
-
-  /** Generation sidecar row: the baked scalars + the pinned versions.
-    */
-  private def sidecarRow(spark: org.apache.spark.sql.SparkSession,
-                         n: Long, sumDl: Long, avgdl0: Double,
-                         postV: Long, satV: Long): DataFrame =
-    spark.range(1).select(lit(n).as("n_docs"), lit(sumDl).as("sum_dl"),
-      lit(avgdl0).as("avgdl0"), lit(postV).as("post_version"),
-      lit(satV).as("sat_version"))
-
-  private def readSidecar(sideTx: TxTable): (Long, Long, Double, Long, Long) = {
-    val r = sideTx.read()
-      .select("n_docs", "sum_dl", "avgdl0", "post_version", "sat_version")
-      .head()
-    (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3), r.getLong(4))
-  }
-
-  /** Full factored build + publish: bake avgdl from the current
-    * rollup, OVERWRITE the sat table (a fresh avgdl₀ epoch — prior
-    * generations keep their pinned versions), write the df table into
-    * a fresh generation, publish. Returns the generation.
-    */
-  def buildFactoredGeneration(gens: AnnGenerations, postTx: TxTable,
-                              statsTx: TxTable, satTx: TxTable,
-                              k1: Double = 1.2, b: Double = 0.75): Long = {
-    val (n, sumDl, avgdl0) = stats(statsTx)
-    val postV = postTx.latestVersion()
-    val post = postTx.read(Some(postV))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val satV = satTx.overwrite(
-      Lexical.bm25SatFromPostings(post, avgdl0, k1, b).sort("term"))
-    val (g, dfTx, sideTx) = gens.next()
-    dfTx.appendOnce(Lexical.docFreq(post).sort("term"),
-      tag = s"flex-df-$g")
-    post.unpersist()
-    sideTx.appendOnce(
-      sidecarRow(statsTx.read().sparkSession, n, sumDl, avgdl0, postV, satV),
-      tag = s"flex-side-$g")
-    gens.publish(g)
-    g
-  }
 
   /** How a [[refreshFactored]] run regenerated — or why it didn't. */
   sealed trait FactoredRefresh
@@ -460,37 +531,75 @@ object StreamingLexicalIndex {
     */
   final case class FactoredFull(gen: Long) extends FactoredRefresh
 
-  /** The incremental refresh loop. N outside `nThresholdPermille` with
-    * avgdl still inside `avgdlBandPermille` → DELTA build: sat rows
-    * for the postings appended since the generation's pinned version
-    * (read via the log-level file diff — never a corpus scan), df =
-    * old df ⊕ delta term counts (vocab-sized merge), fresh generation,
-    * atomic swap. avgdl out of band → full re-bake. Both axes in band
-    * → [[FactoredFresh]].
+  /** Open the next generation, commit its df table, release the
+    * persisted postings `src`, commit the sidecar — the baked stats and
+    * the pinned postings and sat versions — and publish it.
     */
-  def refreshFactored(gens: AnnGenerations, postTx: TxTable,
-                      statsTx: TxTable, satTx: TxTable,
-                      nThresholdPermille: Long = 100,
-                      avgdlBandPermille: Long = 100,
-                      k1: Double = 1.2, b: Double = 0.75)
-      : FactoredRefresh = {
-    val cur = gens.current().getOrElse(throw new IllegalStateException(
-      "refreshFactored before any factored generation — " +
-        "buildFactoredGeneration first"))
-    val (_, _, sideTx) = cur
-    val (n0, _, avgdl0, postV0, satV0) = readSidecar(sideTx)
-    val (nNow, sumNow, avgdlNow) = stats(statsTx)
-    val nPermille = math.round(1000.0 * nNow.toDouble / n0.toDouble)
-    val avgdlPermille = math.round(1000.0 * avgdlNow / avgdl0)
-    val nStale = math.abs(nPermille - 1000) > nThresholdPermille
-    val avgdlStale = math.abs(avgdlPermille - 1000) > avgdlBandPermille
+  private def publish(layout: PostingsLayout, gens: AnnGenerations,
+                      df: DataFrame, src: DataFrame, statsTx: TxTable,
+                      st: FieldStats, postV: Long, satV: Long): Long = {
+    val (g, dfTx, sideTx) = gens.next()
+    dfTx.appendOnce(df.sort("term"), tag = s"${layout.genTag}-df-$g")
+    src.unpersist()
+    sideTx.appendOnce(
+      layout.sidecar(statsTx.read().sparkSession, st, postV, satV),
+      tag = s"${layout.genTag}-side-$g")
+    gens.publish(g)
+    g
+  }
+
+  /** Full factored build + publish: bake avgdl from the current
+    * rollup, OVERWRITE the sat table (a fresh avgdl₀ epoch — prior
+    * generations keep their pinned versions), write the df table into
+    * a fresh generation, publish. Returns the generation.
+    */
+  private def buildFactored(layout: PostingsLayout, gens: AnnGenerations,
+                            postTx: TxTable, statsTx: TxTable,
+                            satTx: TxTable, k1: Double, b: Double): Long = {
+    val st = layout.rollup(statsTx)
+    val postV = postTx.latestVersion()
+    val post = postTx.read(Some(postV))
+    layout.check(post)
+    post.persist(StorageLevel.MEMORY_AND_DISK)
+    val satV = satTx.overwrite(
+      layout.sat(post, st.map(_._3), k1, b).sort("term"))
+    publish(layout, gens, layout.docFreq(post), post, statsTx, st, postV,
+      satV)
+  }
+
+  /** The incremental refresh loop. N outside `nThresholdPermille` with
+    * every avgdl still inside `avgdlBandPermille` → DELTA build: sat
+    * rows for the postings appended since the generation's pinned
+    * version (read via the log-level file diff — never a corpus scan),
+    * df = old df ⊕ delta term counts (vocab-sized merge), fresh
+    * generation, atomic swap. An avgdl out of band, or a postings range
+    * that is not append-pure → full re-bake. Both axes in band →
+    * [[FactoredFresh]].
+    */
+  private def refresh(layout: PostingsLayout, gens: AnnGenerations,
+                      postTx: TxTable, statsTx: TxTable, satTx: TxTable,
+                      nThresholdPermille: Long, avgdlBandPermille: Long,
+                      k1: Double, b: Double): FactoredRefresh = {
+    layout.check(postTx.read())
+    val e = layout.entry
+    val (_, dfTxOld, sideTx) = gens.current().getOrElse(
+      throw new IllegalStateException(s"refreshFactored$e before any " +
+        s"factored generation — buildFactoredGeneration$e first"))
+    val (st0, postV0, satV0) = layout.readSidecar(sideTx)
+    val stNow = layout.rollup(statsTx)
+    val nStale = outside(permille(stNow.head._1.toDouble,
+      st0.head._1.toDouble), nThresholdPermille)
+    val avgdlStale = st0.zip(stNow).exists { case ((_, _, a0), (_, _, a)) =>
+      outside(permille(a, a0), avgdlBandPermille)
+    }
     if (!nStale && !avgdlStale) FactoredFresh
-    else if (avgdlStale)
-      FactoredFull(buildFactoredGeneration(gens, postTx, statsTx, satTx,
-        k1, b))
     else {
+      // capture the postings head ONCE: the guard and the delta read
+      // must see the same version — a commit landing between two
+      // latestVersion() calls would pass the guard at one version and
+      // abort the range read at another
       val postVNow = postTx.latestVersion()
-      if (!postTx.isAppendPure(postV0, postVNow) ||
+      if (avgdlStale || !postTx.isAppendPure(postV0, postVNow) ||
           satTx.latestVersion() != satV0)
         // compaction rewrote the range (the file-level delta would
         // double-count), OR the sat log is ahead of the published
@@ -498,37 +607,27 @@ object StreamingLexicalIndex {
         // (postV0, postV'] and died before publishing, so a delta append
         // here would OVERLAP that orphan range and the new pin would
         // serve duplicate (term, doc) sat rows, silently inflating every
-        // fold. The full build's versioned OVERWRITE clears the orphans;
-        // take it, honestly.
-        FactoredFull(buildFactoredGeneration(gens, postTx, statsTx, satTx,
+        // fold. The full build's versioned OVERWRITE clears the orphans.
+        FactoredFull(buildFactored(layout, gens, postTx, statsTx, satTx,
           k1, b))
       else {
         val delta = postTx.readAppendedSince(postV0, Some(postVNow))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(StorageLevel.MEMORY_AND_DISK)
         // content-range tag: a crashed run that already committed this
         // exact delta range no-ops here, and the pinned version below
         // still covers its rows exactly once
         satTx.appendOnce(
-          Lexical.bm25SatFromPostings(delta, avgdl0, k1, b).sort("term"),
-          tag = s"flex-sat-$postV0-$postVNow")
-        val satV = satTx.latestVersion()
-        val (g, dfTx, sideTxNew) = gens.next()
-        val (_, dfTxOld, _) = cur
-        val deltaDf = Lexical.docFreq(delta)
+          layout.sat(delta, st0.map(_._3), k1, b).sort("term"),
+          tag = s"${layout.genTag}-sat-$postV0-$postVNow")
         val merged = dfTxOld.read().select(col("term"), col("df").as("df0"))
-          .join(deltaDf.select(col("term"), col("df").as("df1")),
+          .join(layout.docFreq(delta).select(col("term"), col("df").as("df1")),
             Seq("term"), "full_outer")
           .select(col("term"),
             (coalesce(col("df0"), lit(0L)) + coalesce(col("df1"), lit(0L)))
               .as("df"))
-        dfTx.appendOnce(merged.sort("term"), tag = s"flex-df-$g")
-        delta.unpersist()
-        sideTxNew.appendOnce(
-          sidecarRow(statsTx.read().sparkSession, nNow, sumNow, avgdl0,
-            postVNow, satV),
-          tag = s"flex-side-$g")
-        gens.publish(g)
-        FactoredDelta(g)
+        FactoredDelta(publish(layout, gens, merged, delta, statsTx,
+          stNow.zip(st0).map { case ((n, s, _), (_, _, a0)) => (n, s, a0) },
+          postVNow, satTx.latestVersion()))
       }
     }
   }
@@ -537,259 +636,64 @@ object StreamingLexicalIndex {
     * version × the generation's df table × the baked doc count —
     * exact BM25 at (N, df, avgdl₀) as of the generation build.
     */
-  def serveFactored(gens: AnnGenerations, satTx: TxTable,
-                    queries: DataFrame, qTextCol: String, qIdCol: String,
-                    k: Int): DataFrame = {
+  private def serveGeneration(layout: PostingsLayout, gens: AnnGenerations,
+                              satTx: TxTable, queries: DataFrame,
+                              qTextCol: String, qIdCol: String,
+                              k: Int): DataFrame = {
     val (_, dfTx, sideTx) = gens.current().getOrElse(
       throw new IllegalStateException(
-        "serveFactored before any factored generation"))
-    val (n, _, _, _, satV) = readSidecar(sideTx)
+        s"serveFactored${layout.entry} before any factored generation"))
+    val (st, _, satV) = layout.readSidecar(sideTx)
     Lexical.bm25TopKFromFactoredStore(satTx.read(Some(satV)),
-      dfTx.read(), n, queries, qTextCol, qIdCol, k)
+      dfTx.read(), st.head._1, queries, qTextCol, qIdCol, k)
   }
 
-  // ---- BM25F factored generations (round 15): the same loop,
-  // field-aware. Multi-field postings are STILL per-document facts
-  // (a doc's rows across all fields arrive in its batch, so the
-  // (term, doc) field fold never spans batches), the baked scalar is
-  // now the per-FIELD avgdl vector, and df is any-field (distinct
-  // (term, doc) — a delta doc is NEW, so old-df ⊕ delta-distinct
-  // counts stays integer-exact). Serving reuses the shared factored
-  // path unchanged.
-  //
-  // PACKED maintained layout (round 18, guide §2.3/§2.4 — the r17
-  // batch win ported): the store holds [[Lexical.postingsFieldsPacked]]
-  // rows — ONE row per (term, doc) with the field-asc (field, tf)
-  // entries and the per-doc dls vector — so every generation build
-  // (full AND delta) folds the BM25F pseudo-frequency SCAN-LOCALLY
-  // instead of paying the (term, doc)-keyed exchange over the whole
-  // multi-field postings volume per refresh, and any-field df is a
-  // plain count (the distinct exchange is gone too). Rows stay
-  // distinct (term, doc) per-doc facts, so the delta algebra —
-  // arrival-sized sat appends, old-df ⊕ delta-count merges, pinned
-  // versions — is unchanged; sat doubles are bit-identical to the
-  // flat fold (LexicalSpec flat-vs-packed pins + the
-  // StreamingLexicalIndexSpec served ≡ flat-rebuild differential, both
-  // against the test-tree flat reference). A store written in the flat
-  // layout is refused ([[requirePackedF]]), never misread.
+  /** [[buildFactored]] over the flat store. */
+  def buildFactoredGeneration(gens: AnnGenerations, postTx: TxTable,
+                              statsTx: TxTable, satTx: TxTable,
+                              k1: Double = 1.2, b: Double = 0.75): Long =
+    buildFactored(Flat, gens, postTx, statsTx, satTx, k1, b)
 
-  /** Fails unless `post` (a read of the maintained BM25F postings
-    * store) holds the packed layout — or nothing yet. A store written
-    * in the flat one-row-per-(field, term, doc) layout would be
-    * misread: packed batches would append to a flat table, and
-    * [[Lexical.docFreqPacked]] would count its per-field rows as df.
-    */
-  private def requirePackedF(post: DataFrame): Unit = {
-    val cols = post.columns.toSet
-    if (cols.nonEmpty && !Set("dls", "entries").subsetOf(cols))
-      throw new IllegalStateException(
-        s"BM25F postings store has columns ${post.columns.mkString(", ")}" +
-          " — not the packed layout (term, doc_id, dls, entries); " +
-          "rebuild it with bootstrapF")
-  }
+  /** [[refresh]] the flat store's factored generation. */
+  def refreshFactored(gens: AnnGenerations, postTx: TxTable,
+                      statsTx: TxTable, satTx: TxTable,
+                      nThresholdPermille: Long = 100,
+                      avgdlBandPermille: Long = 100,
+                      k1: Double = 1.2, b: Double = 0.75)
+      : FactoredRefresh =
+    refresh(Flat, gens, postTx, statsTx, satTx, nThresholdPermille,
+      avgdlBandPermille, k1, b)
 
-  private def statsPartialF(batch: DataFrame, fields: Seq[Lexical.FieldSpec],
-                            tag: String): DataFrame =
-    fields.zipWithIndex.map { case (f, i) =>
-      batch.select(lit(i).as("field"),
-        size(TextFunctions.tokens(col(f.textCol))).cast("long").as("dl"))
-    }.reduce(_ unionByName _)
-      .groupBy("field")
-      .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .withColumn("src_tag", lit(tag))
+  /** [[serveGeneration]] of the flat store. */
+  def serveFactored(gens: AnnGenerations, satTx: TxTable, queries: DataFrame,
+                    qTextCol: String, qIdCol: String, k: Int): DataFrame =
+    serveGeneration(Flat, gens, satTx, queries, qTextCol, qIdCol, k)
 
-  /** Bulk-load the multi-field postings store + per-field stats
-    * partials. Tagged — a re-run is a no-op.
-    */
-  def bootstrapF(corpus: DataFrame, fields: Seq[Lexical.FieldSpec],
-                 idCol: String, postTx: TxTable, statsTx: TxTable): Unit = {
-    // packed rows (round 18) + overlapped commits (the bootstrap/
-    // bootstrapP shape, guide §2.6)
-    inParallel(
-      postTx.appendOnce(
-        Lexical.postingsFieldsPacked(corpus, fields, idCol).sort("term"),
-        tag = "flexf-baseline"),
-      statsTx.appendOnce(statsPartialF(corpus, fields, "flexf-baseline"),
-        tag = "flexf-stats-baseline"))
-    ()
-  }
-
-  /** Incremental multi-field maintainer: doc files → field postings
-    * (exactly-once) + one per-field stats partial per batch.
-    */
-  def runF(spark: org.apache.spark.sql.SparkSession, docsDir: String,
-           fields: Seq[Lexical.FieldSpec], postTx: TxTable,
-           statsTx: TxTable, checkpointDir: String,
-           schema: StructType, idCol: String = "doc_id",
-           maxFilesPerTrigger: Int = 1000): StreamingQuery = {
-    requirePackedF(postTx.read())
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(docsDir)
-      .writeStream.option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // round 18 — the run()/runP() rationale ported: no
-        // localCheckpoint (both commits tokenize for themselves; the
-        // eager materialization was one extra job per trigger), delta
-        // sorted WITHIN partitions (the factored loop's consumers read
-        // the store whole — full/delta generation builds — so the
-        // per-trigger global-sort range-sampling job bought nothing),
-        // and the two disjoint-table commits overlap (guide §2.6)
-        inParallel(
-          postTx.appendOnce(
-            Lexical.postingsFieldsPacked(batch, fields, idCol)
-              .sortWithinPartitions("term"),
-            tag = s"flexf-batch-$batchId"),
-          statsTx.appendOnce(
-            statsPartialF(batch, fields, s"flexf-batch-$batchId"),
-            tag = s"flexf-stats-$batchId"))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
-
-  /** Exact per-field rollup: Seq over field index of (n_docs, sum_dl,
-    * avgdl).
-    */
-  def statsF(statsTx: TxTable, nFields: Int): Seq[(Long, Long, Double)] = {
-    val rows = statsTx.read()
-      .groupBy("field")
-      .agg(sum(col("n_docs")).as("n"), sum(col("sum_dl")).as("s"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1), r.getLong(2))).toMap
-    require(rows.size == nFields,
-      s"stats store has ${rows.size} fields, expected $nFields — " +
-        "bootstrapF first")
-    (0 until nFields).map { i =>
-      val (n, s) = rows(i)
-      (n, s, s.toDouble / n.toDouble)
-    }
-  }
-
-  private def sidecarRowsF(spark: org.apache.spark.sql.SparkSession,
-                           st: Seq[(Long, Long, Double)],
-                           postV: Long, satV: Long): DataFrame =
-    st.zipWithIndex.map { case ((n, s, a), i) =>
-      spark.range(1).select(lit(i).as("field"), lit(n).as("n_docs"),
-        lit(s).as("sum_dl"), lit(a).as("avgdl0"),
-        lit(postV).as("post_version"), lit(satV).as("sat_version"))
-    }.reduce(_ unionByName _)
-
-  private def readSidecarF(sideTx: TxTable)
-      : (Seq[(Long, Long, Double)], Long, Long) = {
-    val rows = sideTx.read()
-      .select("field", "n_docs", "sum_dl", "avgdl0", "post_version",
-        "sat_version")
-      .collect().sortBy(_.getInt(0))
-    (rows.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq,
-      rows.head.getLong(4), rows.head.getLong(5))
-  }
-
-  /** Full BM25F factored build + publish (the [[buildFactoredGeneration]]
-    * shape with the per-field avgdl vector baked).
+  /** [[buildFactored]] over the packed BM25F store, at the per-field
+    * avgdl vector (each field's b rides in its spec).
     */
   def buildFactoredGenerationF(gens: AnnGenerations, postTx: TxTable,
                                statsTx: TxTable, satTx: TxTable,
                                fields: Seq[Lexical.FieldSpec],
-                               k1: Double = 1.2): Long = {
-    val st = statsF(statsTx, fields.length)
-    val postV = postTx.latestVersion()
-    val post = postTx.read(Some(postV))
-    requirePackedF(post)
-    post.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val satV = satTx.overwrite(
-      Lexical.bm25fSatFromPackedPostings(post, st.map(_._3), fields, k1)
-        .sort("term"))
-    val (g, dfTx, sideTx) = gens.next()
-    dfTx.appendOnce(Lexical.docFreqPacked(post).sort("term"),
-      tag = s"flexf-df-$g")
-    post.unpersist()
-    sideTx.appendOnce(
-      sidecarRowsF(statsTx.read().sparkSession, st, postV, satV),
-      tag = s"flexf-side-$g")
-    gens.publish(g)
-    g
-  }
+                               k1: Double = 1.2): Long =
+    buildFactored(Packed(fields), gens, postTx, statsTx, satTx, k1, b = 0)
 
-  /** BM25F refresh loop: N outside its band with EVERY field's avgdl
-    * inside its band → DELTA build (sat rows for the appended postings
-    * at the baked avgdl vector; any-field df = old ⊕ delta distinct
-    * counts); any avgdl out of band, or a non-append-pure range →
-    * full re-bake.
+  /** [[refresh]] the packed BM25F store's factored generation: any
+    * field's avgdl out of band re-bakes.
     */
   def refreshFactoredF(gens: AnnGenerations, postTx: TxTable,
                        statsTx: TxTable, satTx: TxTable,
                        fields: Seq[Lexical.FieldSpec],
                        nThresholdPermille: Long = 100,
                        avgdlBandPermille: Long = 100,
-                       k1: Double = 1.2): FactoredRefresh = {
-    requirePackedF(postTx.read())
-    val cur = gens.current().getOrElse(throw new IllegalStateException(
-      "refreshFactoredF before any factored generation — " +
-        "buildFactoredGenerationF first"))
-    val (_, dfTxOld, sideTx) = cur
-    val (st0, postV0, satV0) = readSidecarF(sideTx)
-    val stNow = statsF(statsTx, fields.length)
-    val nPermille =
-      math.round(1000.0 * stNow.head._1.toDouble / st0.head._1.toDouble)
-    val nStale = math.abs(nPermille - 1000) > nThresholdPermille
-    val avgdlStale = st0.zip(stNow).exists { case ((_, _, a0), (_, _, a1)) =>
-      math.abs(math.round(1000.0 * a1 / a0) - 1000) > avgdlBandPermille
-    }
-    // capture the postings head ONCE: the guard and the delta read must
-    // see the same version — a commit landing between two latestVersion()
-    // calls would pass the guard at one version and abort the range read
-    // at another (the single-field path's device)
-    val postVNow = postTx.latestVersion()
-    if (!nStale && !avgdlStale) FactoredFresh
-    else if (avgdlStale || !postTx.isAppendPure(postV0, postVNow) ||
-        satTx.latestVersion() != satV0)
-      // avgdl out of band, a compacted/overwritten postings range, or a
-      // sat log ahead of the published pin (a crashed run's orphan
-      // commit — a delta append would overlap it and serve duplicate
-      // sat rows): the full build's versioned overwrite resets all three
-      FactoredFull(buildFactoredGenerationF(gens, postTx, statsTx, satTx,
-        fields, k1))
-    else {
-      val delta = postTx.readAppendedSince(postV0, Some(postVNow))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      satTx.appendOnce(
-        Lexical.bm25fSatFromPackedPostings(delta, st0.map(_._3), fields, k1)
-          .sort("term"),
-        tag = s"flexf-sat-$postV0-$postVNow")
-      val satV = satTx.latestVersion()
-      val (g, dfTx, sideTxNew) = gens.next()
-      val merged = dfTxOld.read().select(col("term"), col("df").as("df0"))
-        .join(Lexical.docFreqPacked(delta)
-          .select(col("term"), col("df").as("df1")),
-          Seq("term"), "full_outer")
-        .select(col("term"),
-          (coalesce(col("df0"), lit(0L)) + coalesce(col("df1"), lit(0L)))
-            .as("df"))
-      dfTx.appendOnce(merged.sort("term"), tag = s"flexf-df-$g")
-      delta.unpersist()
-      sideTxNew.appendOnce(
-        sidecarRowsF(statsTx.read().sparkSession,
-          stNow.zip(st0).map { case ((n, s, _), (_, _, a0)) => (n, s, a0) },
-          postVNow, satV),
-        tag = s"flexf-side-$g")
-      gens.publish(g)
-      FactoredDelta(g)
-    }
-  }
+                       k1: Double = 1.2): FactoredRefresh =
+    refresh(Packed(fields), gens, postTx, statsTx, satTx,
+      nThresholdPermille, avgdlBandPermille, k1, b = 0)
 
-  /** Serve the published BM25F factored generation — the SAME shared
-    * factored path as single-field serving (idf on the query side ×
-    * the pinned sat snapshot).
+  /** [[serveGeneration]] of the packed BM25F store; the sidecar, not
+    * the field specs, carries what serving needs.
     */
-  def serveFactoredF(gens: AnnGenerations, satTx: TxTable,
-                     queries: DataFrame, qTextCol: String, qIdCol: String,
-                     k: Int): DataFrame = {
-    val (_, dfTx, sideTx) = gens.current().getOrElse(
-      throw new IllegalStateException(
-        "serveFactoredF before any factored generation"))
-    val (st, _, satV) = readSidecarF(sideTx)
-    Lexical.bm25TopKFromFactoredStore(satTx.read(Some(satV)),
-      dfTx.read(), st.head._1, queries, qTextCol, qIdCol, k)
-  }
+  def serveFactoredF(gens: AnnGenerations, satTx: TxTable, queries: DataFrame,
+                     qTextCol: String, qIdCol: String, k: Int): DataFrame =
+    serveGeneration(Packed(Nil), gens, satTx, queries, qTextCol, qIdCol, k)
 }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.SparkSession
@@ -94,6 +95,33 @@ class GraftExtensionsSpec extends SparkSpec {
         .head.getLong(0))
     assert(s.experimental.extraStrategies.isEmpty)
     assert(s.experimental.extraOptimizations.isEmpty)
+  }
+
+  test("register on a session built without the extensions adds the functions and the planner rules once") {
+    // every session of this JVM shares TestSpark's context, whose conf
+    // names the extensions: the plain session lives in a child JVM
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val opens = jvmArgs.zipWithIndex.flatMap {
+      case (a, _) if a.startsWith("--add-opens=") => Seq(a)
+      case ("--add-opens", i) if i + 1 < jvmArgs.size =>
+        Seq("--add-opens", jvmArgs(i + 1))
+      case _ => Nil
+    }
+    assert(opens.nonEmpty, jvmArgs.mkString(" "))
+    val log = java.io.File.createTempFile("graft-plain-session", ".log")
+    val cmd = Seq(s"${System.getProperty("java.home")}/bin/java", "-Xmx768m") ++
+      opens ++ Seq("-cp", System.getProperty("java.class.path"),
+        "graft.PlainSessionRegisterMain")
+    val child = new ProcessBuilder(cmd: _*)
+      .redirectErrorStream(true).redirectOutput(log).start()
+    try {
+      val done = child.waitFor(180, java.util.concurrent.TimeUnit.SECONDS)
+      def out = java.nio.file.Files.readAllLines(log.toPath).asScala
+        .filter(_.startsWith("FAILED")).mkString("\n")
+      assert(done, s"the child JVM did not finish within 180 s ($log)")
+      assert(child.exitValue() == 0, s"$out\n(log: $log)")
+    } finally child.destroyForcibly()
   }
 
   test("an integer argument beyond the Int range is refused, not wrapped") {

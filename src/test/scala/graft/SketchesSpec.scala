@@ -442,9 +442,11 @@ class SketchesSpec extends SparkSpec {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      // reuses orig's SparkContext; extensions conf applies to the NEW
-      // session only — the canonical spark.sql.extensions config path
-      // the advice flagged as missing kmv_sketch256/64
+      // reuses orig's SparkContext, whose conf already names the
+      // extensions (TestSpark): a new session takes its extensions from
+      // the context's conf, so the builder setting below only restates
+      // it. What this checks is that a NEW session, whose registry only
+      // the extensions fill, gets the udafs (kmv_sketch256/64) too.
       val s2 = SparkSession.builder()
         .config("spark.sql.extensions", "graft.plans.GraftExtensions")
         .getOrCreate()

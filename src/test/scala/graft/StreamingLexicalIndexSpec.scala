@@ -93,6 +93,46 @@ class StreamingLexicalIndexSpec extends SparkSpec {
     assert(live == direct)
   }
 
+  test("maintained positional store: phrase and SDM serving ≡ a " +
+       "from-scratch positional build; a replayed drain appends nothing") {
+    val root = tmp("graft-lexpos")
+    val postTx = new TxTable(spark, s"$root/post")
+    val statsTx = new TxTable(spark, s"$root/stats")
+    val all = corpus(50)
+    // 80 % bootstrapped, then two 10 % batches through the maintainer
+    Idx.bootstrapP(corpus(40), "doc_id", "text", postTx, statsTx)
+    val docsDir = s"$root/docs"
+    Seq(40, 45).foreach(off => corpus(5, off).coalesce(1)
+      .write.mode("append").parquet(docsDir))
+    def drain(): Unit = Idx.runP(spark, docsDir, postTx, statsTx,
+      s"$root/cp", maxFilesPerTrigger = 1, compactEvery = 2)
+      .awaitTermination()
+    drain()
+    val scratch = Lexical.postingsPositional(all, "text", "doc_id")
+    def rowSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("term", "doc_id", "dl", "tf", "positions").collect().toSet
+    assert(rowSet(postTx.read()) == rowSet(scratch))
+
+    val qs = Seq((1L, "alpha beta"), (2L, "gamma delta"),
+      (3L, "eps alpha beta"), (4L, "delta")).toDF("q_id", "qtext")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("q_id", "rank").collect().toSeq
+    val phrase = rows(Idx.servePhrase(postTx, statsTx, qs, "qtext", "q_id",
+      k = 3))
+    assert(phrase.nonEmpty)
+    assert(phrase == rows(Lexical.phraseTopKFromPostings(scratch, qs,
+      "qtext", "q_id", k = 3)))
+    assert(rows(Idx.serveSdm(postTx, statsTx, qs, "qtext", "q_id", k = 3))
+      == rows(Lexical.sdmTopKFromPostings(scratch, qs, "qtext", "q_id",
+        k = 3)))
+
+    // the same checkpoint has seen both files: a replay commits nothing
+    val (postV, statsV) = (postTx.latestVersion(), statsTx.latestVersion())
+    drain()
+    assert(postTx.latestVersion() == postV)
+    assert(statsTx.latestVersion() == statsV)
+  }
+
   test("generation-following serving: a mid-stream swap takes effect " +
        "on the next batch without a restart") {
     val root = tmp("graft-lexfollow")
